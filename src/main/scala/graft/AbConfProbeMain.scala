@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Throwaway A/B: run ONE registry query alternating a session conf
-  * value between reps in the SAME session — box drift between separate
-  * JVMs is 2× on this machine, so only alternating same-session pairs
-  * decide a knob. Usage:
+/** Same-session A/B: run ONE registry query alternating a runtime
+  * session conf between reps on top of the [[GraftSession]] profile —
+  * drift between separate JVMs reaches 2× on a shared box, so only
+  * alternating same-session pairs decide a knob (e.g. the profile's
+  * join preference: `spark.sql.join.preferSortMergeJoin false true`).
+  * Usage:
   *   runMain graft.AbConfProbeMain <query> <confKey> <valA> <valB> [pairs]
   */
 object AbConfProbeMain {
@@ -15,15 +15,7 @@ object AbConfProbeMain {
     val Array(qname, key, valA, valB) = args.take(4)
     val pairs = if (args.length > 4) args(4).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val q = graft.queries.Registry.all.find(_.name == qname)
       .getOrElse(sys.error(s"no registry query named $qname"))
     def leg(v: String): Double = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Large-synthetic soak for the continuous admission loop
@@ -27,11 +26,7 @@ object AdmissionSoakMain {
     val nDocs = args.headOption.map(_.toLong).getOrElse(250000L)
     val segments = args.drop(1).headOption.map(_.toInt).getOrElse(6)
     require(nDocs % 5 == 0, "nDocs must be a multiple of 5 (20% dup rate)")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def time[T](label: String)(f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f

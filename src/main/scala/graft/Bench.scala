@@ -1,7 +1,6 @@
 package graft
 
 import graft.queries.Registry
-import org.apache.spark.sql.SparkSession
 
 /** Headline benchmark: runs the `bench = true` queries from the Registry
   * against SPARK_GRAFT_SF_DIR and prints one JSON line. A warmup pass on
@@ -9,36 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing floor — SPARK DEFAULT (1m). The r18 global 64k
-      // floor was a net regression at the measured configuration: the
-      // driver's ground truth showed 29/62 rows >10% slower at 32
-      // cores (51/65 rows ran FASTER at 8 cores — the floor kept every
-      // small post-shuffle stage at up to 32 micro-tasks that AQE
-      // previously coalesced away), and the three hot stages it was
-      // aimed at are fixed by the TARGETED spread() in RetrievalOps
-      // instead (driver-validated 3.3× on q_bm25_proximity_stored).
-      // The env knob stays for experiments only.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"))
-      // guide §3.1/§9: let the planner pick shuffled-hash join where its
-      // size conditions hold (build side below the per-partition
-      // threshold) instead of always sort-merge — removes the sort from
-      // the small shuffle joins in the matcher/scorer/lifecycle paths.
-      // Same-session alternating A/B medians (this box): q_bm25_phrase
-      // 9.1→8.2 s, q_media_dup_index 9.7→7.9, q_revenue_by_nation
-      // 3.0→2.0, q_bm25_proximity 11.2→10.7; full-suite A/B below in
-      // OPTIMIZATION_r19.md. Env-overridable back to the Spark default.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // Warmup: JIT + codegen + parquet footer caches — including the
     // replay exec at n=1 (scalar engine) and n=2 (unified engine) on a

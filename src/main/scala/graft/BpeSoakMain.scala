@@ -1,7 +1,6 @@
 package graft
 
 import graft.pipeline.TextOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** BPE trainer soak at realistic vocabulary scale: real corpora carry
@@ -18,10 +17,7 @@ object BpeSoakMain {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(2000000L)
     val rounds = args.drop(1).headOption.map(_.toInt).getOrElse(5)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val docs = spark.range(n)
       .select(col("id").as("doc_id"), conv(col("id"), 10, 26).as("text"))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{BookCheckpoint, OrderBookOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multi-day checkpoint-chain soak for the book replay lifecycle: seven
@@ -23,10 +23,7 @@ object CheckpointChainSoakMain {
     val nProducts = args.drop(1).headOption.map(_.toLong).getOrElse(10000L)
     val days = 7
     val n = 5
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def time[T](label: String)(f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Large-synthetic soak for the dedup/CC/incremental paths — the scale
@@ -21,11 +20,7 @@ object DedupSoakMain {
   def main(args: Array[String]): Unit = {
     val nEdges = args.headOption.map(_.toLong).getOrElse(10000000L)
     val nDocs = args.drop(1).headOption.map(_.toLong).getOrElse(5000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def time[T](label: String)(f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f

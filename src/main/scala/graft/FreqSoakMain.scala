@@ -1,7 +1,6 @@
 package graft
 
 import graft.pipeline.StatsOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale soak for the persisted count-min frequency index — the
@@ -36,10 +35,7 @@ object FreqSoakMain {
       "row counts must be multiples of 100 so hot-key truths are exact")
     val depth = 4
     val width = 1 << 16
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def time[T](label: String)(f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f

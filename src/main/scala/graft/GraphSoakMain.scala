@@ -1,7 +1,7 @@
 package graft
 
 import graft.pipeline.LinkGraphOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** PageRank soak at web-graph proportions: a deterministic synthetic
@@ -27,10 +27,7 @@ object GraphSoakMain {
   def main(args: Array[String]): Unit = {
     val nHosts = args.headOption.map(_.toLong).getOrElse(1000000L)
     val nEdges = args.drop(1).headOption.map(_.toLong).getOrElse(20000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round diagnostic: run ONE registry query (by name) and
   * print every Spark job it spawns — job id, wall seconds, stage count,
@@ -16,21 +15,7 @@ object JobProfileMain {
     val qname = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // A/B harness: extra session confs via SPARK_GRAFT_PROFILE_CONF
-    // ("k1=v1,k2=v2") so a candidate knob can be measured without
-    // touching the bench mains
-    sys.env.get("SPARK_GRAFT_PROFILE_CONF").foreach(_.split(",")
-      .filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v) })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     final case class JobRow(id: Int, t0: Long, var t1: Long = 0L,
                             var stages: Int = 0, var tasks: Int = 0,

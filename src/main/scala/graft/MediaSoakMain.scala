@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Multimodal-track soak — the measured numbers behind the container
@@ -29,10 +28,7 @@ object MediaSoakMain {
     val nMeta = args.headOption.map(_.toLong).getOrElse(200000L)
     val nDecode = args.drop(1).headOption.map(_.toLong).getOrElse(20000L)
     val nFlac = args.drop(2).headOption.map(_.toLong).getOrElse(500000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     import graft.pipeline.MultimodalOps
 
     def time[T](label: String)(f: => T): (T, Double) = {

@@ -1,12 +1,11 @@
 package graft
 
 import graft.queries.Registry
-import org.apache.spark.sql.SparkSession
 
 /** Dumps `.explain("formatted")` for the requested registry queries to
   * `<outDir>/<name>_<suffix>.txt` — the r18 optimization round's plan
-  * evidence (plans/r18, before and after files). Bench-identical
-  * session confs so the dumped plan is the one the bench executes.
+  * evidence (plans/r18, before and after files). The [[GraftSession]]
+  * profile Bench runs, so the dumped plan is the one the bench executes.
   * Usage: runMain graft.PlanExplainMain <outDir> <suffix> [names...]
   * (no names → every bench row). */
 object PlanExplainMain {
@@ -16,19 +15,7 @@ object PlanExplainMain {
     val outDir = args(0)
     val suffix = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"))
-      // same shuffled-hash-join preference as Bench (see the note there)
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     val names = if (args.length > 2) args.drop(2).toSeq

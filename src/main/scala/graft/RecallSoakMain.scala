@@ -2,7 +2,6 @@ package graft
 
 import graft.pipeline.SimilarityOps
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 
 /** Recall at PRODUCTION ANN geometry — the measurement the registry's
   * recall ladders deliberately do not make: the q_*_recall_compare
@@ -41,10 +40,7 @@ object RecallSoakMain {
     require(nVecs >= 2 && nVecs % 2 == 0, s"nVecs must be even, got $nVecs")
     val dim = 32
     val threshold = 0.95
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def time[T](label: String)(f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f

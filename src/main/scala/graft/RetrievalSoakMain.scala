@@ -1,7 +1,7 @@
 package graft
 
 import graft.pipeline.RetrievalOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Ranked-retrieval soak at corpus proportions: 1M synthetic docs
@@ -27,10 +27,7 @@ import org.apache.spark.sql.functions._
 object RetrievalSoakMain {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1-CLASS bench leg for the three headline composites — admission,
@@ -23,18 +23,7 @@ object ScaleBenchMain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     require(mult >= 1, s"multiplier must be >= 1, got $mult")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      // same AQE coalescing floor as Bench (see the note there):
-      // Spark default, env knob for experiments only
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"))
-      // same shuffled-hash-join preference as Bench (see the note there)
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def time[T](label: String)(f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -33,11 +33,8 @@ object ServeSoakMain {
   def main(args: Array[String]): Unit = {
     val nVecs = args.headOption.map(_.toLong).getOrElse(1000000L)
     val nRows = args.drop(1).headOption.map(_.toLong).getOrElse(10000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    spark.conf.set("spark.sql.adaptive.enabled", "false") // see the header
 
     def time[T](label: String)(f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f

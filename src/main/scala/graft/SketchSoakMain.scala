@@ -1,7 +1,6 @@
 package graft
 
 import graft.pipeline.StatsOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale soak for the persisted HLL register index (the 7th stored
@@ -28,10 +27,7 @@ object SketchSoakMain {
     val nRows = args.headOption.map(_.toLong).getOrElse(50000000L)
     val nDelta = args.drop(1).headOption.map(_.toLong).getOrElse(10000000L)
     val m = 1024
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def time[T](label: String)(f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f

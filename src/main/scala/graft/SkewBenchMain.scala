@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Skewed-stream bench: one product, deep stream — the case where the
@@ -9,10 +8,7 @@ import org.apache.spark.sql.functions._
 object SkewBenchMain {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(10000000L)
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val ev = spark.range(n).select(
       col("id").as("seq"), lit(0L).as("product"),
       (col("id") % 2 === 0).as("is_bid"),

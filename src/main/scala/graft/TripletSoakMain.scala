@@ -1,7 +1,7 @@
 package graft
 
 import graft.pipeline.SimilarityOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Adversarial-skew soak for [[SimilarityOps.mineTriplets]] — the
@@ -33,11 +33,7 @@ object TripletSoakMain {
     val nVecs = args.headOption.map(_.toLong).getOrElse(1000000L)
     val dim = 32
     val planes = 16
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", false).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def time[T](label: String)(f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f

@@ -43,25 +43,6 @@ object RetrievalOps {
     * and max tf saturation sum to ~1.4·10¹⁹/8 ≈ 1.8·10¹⁸ < 2⁶³. */
   val MaxQueryTerms: Int = 64
 
-  /** Session-conf key for the EXACT stored probe's block-max routing
-    * threshold (expected candidate rows Σ_t df·queries at or above
-    * which the probe arms block pruning) — see the exact branch of
-    * [[bm25AgainstStoredIndex]]. OPT-IN by default: candidate volume
-    * alone does not predict block PRUNABILITY, and on the prescribed
-    * ×10 scale workload (a 30-token all-common vocabulary — no block's
-    * upper bound ever falls below the seeded threshold) the armed lane
-    * measured 68.7 s vs the plain exact probe's 54.0 s (median of 3
-    * alternating same-session pairs, warm). Workloads with
-    * discriminative terms can opt in by setting a finite threshold;
-    * exactness is spec-pinned either way. */
-  val ExactBlockMaxMinRowsKey =
-    "spark.graft.retrieval.exactBlockMaxMinRows"
-
-  /** Default for [[ExactBlockMaxMinRowsKey]] — effectively "never"
-    * (see the key's scaladoc for the measured justification). */
-  val ExactBlockMaxMinRows: Long = Long.MaxValue
-  private val ExactBlockMaxMinRowsDefault = ExactBlockMaxMinRows
-
   private def div(a: Column, b: Column): Column = call_function("div", a, b)
 
   /** Spread a small-but-CPU-DENSE probe relation across the session's
@@ -295,7 +276,9 @@ object RetrievalOps {
     // while the other cores idled (the stored probes' r18 fix, driver-
     // validated at 3.3× there; the r18 GLOBAL AQE floor aimed at this
     // same stage regressed the suite and is reverted). The exchange
-    // moves only matched postings, workload-sized at any scale.
+    // moves every matched posting, Σ df(t) over the query terms: it
+    // grows with the corpus (147M rows at the ×10 scale leg), not only
+    // with the workload.
     val cand = spread(post.join(broadcast(terms), Seq("token"), "left_semi")
       .join(dl, Seq("doc_id"))
       .select(col("token"), col("doc_id"), col("tf"), col("dl")))
@@ -1409,7 +1392,7 @@ object RetrievalOps {
     // (df, max_tf, min_dl with the corpus stats in scope): tf_micro is
     // increasing in tf and decreasing in dl, so the cell maxima bound
     // every posting of the cell — shared by the max-score branch's
-    // per-term UB and both branches' per-(token, block) UB
+    // per-term UB and its per-(token, block) UB
     val idfUbCol = least(
       div(lit(1000000L) * (lit(2L) * (col("n_docs") - col("df")) + lit(1L)),
         lit(2L) * col("df") + lit(1L)),
@@ -1453,42 +1436,12 @@ object RetrievalOps {
         maxScoreCore(cand, stats, qt, k, split, dfStore, ubStore, blockOpt,
           seedCand = Some(cand0))
       case _ =>
-        // EXACT serving. On a termstats + blockstats artifact the probe
-        // CAN seed a per-query score threshold from each term's best
-        // postings and drop whole doc blocks whose summed upper bound
-        // cannot reach it ([[blockMaxFallback]] — Ding & Suel 2011's
-        // block-max pruning; output ≡ the plain exact scorer by its
-        // completeness proof, and the row's oracle IS the exact SQL).
-        // The route is volume-gated ([[ExactBlockMaxMinRowsKey]]):
-        // expected candidate volume Σ_t df(t)·|queries holding t|
-        // comes from the two workload-/vocabulary-sized severed
-        // relations — no postings touched. The gate defaults to
-        // OPT-IN-ONLY: measured at the ×10 scale leg (147M candidate
-        // rows), the armed lane LOST 54.0 → 68.7 s because the
-        // workload's all-common vocabulary leaves nothing to prune and
-        // the seed + per-(query, block) UB rollup is pure overhead —
-        // see the key's scaladoc.
-        (ts, dfStore) match {
-          case (Some(t), Some(dfr)) if meta.blockCount > 0L =>
-            val minRows = spark.conf.get(ExactBlockMaxMinRowsKey,
-              ExactBlockMaxMinRowsDefault.toString).toLong
-            val vol = qt.groupBy(col("token"))
-              .agg(count(lit(1)).as("__nq"))
-              .join(dfr, Seq("token"))
-              .agg(coalesce(sum(col("__df") * col("__nq")), lit(0L)))
-              .collect()(0).getLong(0)
-            if (vol >= minRows) {
-              val bub = Checkpoints.sever(spread(blockUbOf(t)))
-              // no phase-1 θ exists in the exact mode — the seed inside
-              // the block lane supplies the only threshold
-              val thetaSeed = qt.select(col("query_id")).distinct()
-                .select(col("query_id"),
-                  lit(Long.MinValue).as("__theta1"))
-              topKOf(blockMaxFallback(cand, stats, qt, thetaSeed, k, dfr,
-                bub, meta.blockCount, seedCand = Some(cand0)), k)
-            } else scoreTopK(cand, stats, qt, k, dfreqOverride = Some(dfr))
-          case _ => scoreTopK(cand, stats, qt, k, dfreqOverride = dfStore)
-        }
+        // EXACT serving: the plain scorer. Block-max pruning here lost
+        // at the ×10 scale leg (54.0 → 68.7 s — an all-common
+        // vocabulary leaves no block below the seeded threshold), so
+        // block pruning serves exact answers only through
+        // `maxScoreSplit`'s fallback lane.
+        scoreTopK(cand, stats, qt, k, dfreqOverride = dfStore)
     }
   }
 

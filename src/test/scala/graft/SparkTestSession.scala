@@ -12,6 +12,10 @@ import org.apache.spark.sql.SparkSession
   * here confines a killed context to the suite it died in: the next
   * suite's first access rebuilds the session. */
 object SparkTestSession {
+  /** Fixed, not box-sized, so plan-shape assertions see the same
+    * partition count everywhere; the confs are the shipped profile. */
+  val Cores = 4
+
   @volatile private var current: SparkSession = _
 
   def spark: SparkSession = synchronized {
@@ -20,14 +24,7 @@ object SparkTestSession {
       // getOrCreate on some code paths — clear both registries first
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
-      current = SparkSession.builder()
-        .master("local[4]")
-        .appName("graft-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      current.sparkContext.setLogLevel("WARN")
+      current = GraftSession(Cores)
     }
     current
   }

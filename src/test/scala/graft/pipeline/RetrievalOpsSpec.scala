@@ -467,14 +467,12 @@ class RetrievalOpsSpec extends AnyFunSuite {
       s"cap=1 on a df-16 term must keep one candidate, got ${capOne.length}")
   }
 
-  test("EXACT stored probe through the BLOCK-MAX lane ≡ the plain " +
-    "exact probe: forcing the cost route arms block pruning without " +
-    "changing a row; the default route leaves a small probe alone") {
+  test("EXACT stored probe on a block-stats artifact ≡ the one-shot " +
+    "scorer, absent term included") {
     val dir = tmp("exblk")
     // 40 docs → blockCountFor picks ≥ 1 block; workload mixes an
     // everywhere-term, mid-frequency terms, a unique term, and an
-    // absent term (df = 0 — the no-candidate edge the seed must not
-    // trip on)
+    // absent term (df = 0 — the no-candidate edge)
     RetrievalOps.writeRetrievalIndex(corpusDf(0L to 39L), "text",
       "doc_id", dir)
     val qs = queriesDf(probeQs ++ Seq((4L, "common nowhere")))
@@ -483,14 +481,7 @@ class RetrievalOpsSpec extends AnyFunSuite {
     val oneShot = collectTopK(RetrievalOps.bm25TopK(corpusDf(0L to 39L),
       "text", "doc_id", qs, "query_id", "query_text", 5))
     assert(plain == oneShot,
-      "default-routed exact probe must equal the one-shot scorer")
-    spark.conf.set(RetrievalOps.ExactBlockMaxMinRowsKey, "0")
-    try {
-      val viaBlocks = collectTopK(RetrievalOps.bm25AgainstStoredIndex(
-        spark, dir, qs, "query_id", "query_text", 5))
-      assert(viaBlocks == oneShot,
-        "block-max-routed exact probe must equal the one-shot scorer")
-    } finally spark.conf.unset(RetrievalOps.ExactBlockMaxMinRowsKey)
+      "exact stored probe must equal the one-shot scorer")
   }
 
   private def visibleDataFiles(dir: String, rel: String): Int = {

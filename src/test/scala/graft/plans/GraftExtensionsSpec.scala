@@ -16,9 +16,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val spark = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
+      val spark = graft.GraftSession.builder(SparkTestSession.Cores)
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       import spark.implicits._
