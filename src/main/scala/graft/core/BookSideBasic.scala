@@ -6,12 +6,44 @@ import scala.collection.mutable
   * scalar engine plug into the same replay loops (the custom exec picks
   * the scalar engine for n == 1 via `BookKernel(n)`). */
 trait BookKernel {
+  /** Levels tracked per side. */
+  def n: Int
   def addQty(isBid: Boolean, price: Long, qty: Long): Unit
   def deleteQty(isBid: Boolean, price: Long, qty: Long): Unit
   def modifyQty(isBid: Boolean, prevPrice: Long, prevQty: Long,
                 newPrice: Long, newQty: Long): Unit
   def setLevel(isBid: Boolean, price: Long, qty: Long): Unit
-  def snapshotInto(out: Array[Any], offset: Int): Unit
+
+  /** Allocation-free top-N snapshot in the reference's *grouped* field
+    * order: bid_price_1..n, bid_qty_1..n, ask_price_1..n, ask_qty_1..n
+    * (reference: polars_order_book/src/output.rs:89-120) into out(0 until
+    * 4n). Returns both sides' depths packed by [[BookKernel.depths]]; the
+    * slots past a side's depth are left as they were. */
+  def snapshotLongs(out: Array[Long]): Int
+
+  /** Level-map rescans run so far, each an O(levels) pass that refills
+    * the tracked top-N after one of its levels is removed. */
+  def rescans: Long
+
+  private[this] var boxScratch: Array[Long] = null
+
+  /** Boxed form of [[snapshotLongs]] for the Row-based emitters: writes
+    * the 4n grouped slots into `out` from `offset`, null past a side's
+    * depth. */
+  final def snapshotInto(out: Array[Any], offset: Int): Unit = {
+    if (boxScratch == null) boxScratch = new Array[Long](4 * n)
+    val d = snapshotLongs(boxScratch)
+    var block = 0 // bid prices, bid qtys, ask prices, ask qtys
+    while (block < 4) {
+      val depth = if (block < 2) BookKernel.bidDepth(d) else BookKernel.askDepth(d)
+      var i = 0
+      while (i < n) {
+        out(offset + block * n + i) = if (i < depth) boxScratch(block * n + i) else null
+        i += 1
+      }
+      block += 1
+    }
+  }
 }
 
 object BookKernel {
@@ -21,6 +53,12 @@ object BookKernel {
     * every other depth uses the unified top-N array engine. */
   def apply(n: Int): BookKernel =
     if (n == 1) new OrderBook1 else new OrderBook(n)
+
+  /** Pack the bid and ask depths that [[BookKernel.snapshotLongs]]
+    * returns; n is at most 0xFFFF. */
+  @inline def depths(bid: Int, ask: Int): Int = bid | (ask << 16)
+  @inline def bidDepth(d: Int): Int = d & 0xFFFF
+  @inline def askDepth(d: Int): Int = d >>> 16
 }
 
 /** n=1 scalar fast path: best price/qty tracked as three scalars instead
@@ -43,10 +81,13 @@ final class BookSideBasic(val isBid: Boolean) {
   def bestPrice: Option[Long] = if (hasBest) Some(price(bestKey)) else None
   def bestQuantity: Option[Long] = if (hasBest) Some(bestQty) else None
 
+  private[core] var rescans = 0L
+
   /** Full rescan — only after the best level is deleted (the reference
     * re-derives best from the map the same way,
     * book_side_tracked_basic.rs:117-131). */
   private def rescanBest(): Unit = {
+    rescans += 1
     hasBest = false
     levels.foreach { case (k, q) =>
       if (!hasBest || k > bestKey) { hasBest = true; bestKey = k; bestQty = q }
@@ -88,15 +129,16 @@ final class BookSideBasic(val isBid: Boolean) {
     }
   }
 
-  /** (price_1, qty_1) slots, null-padded — the n=1 grouped layout. */
-  def snapshotInto(out: Array[Any], offset: Int): Unit = {
-    if (hasBest) { out(offset) = price(bestKey); out(offset + 1) = bestQty }
-    else { out(offset) = null; out(offset + 1) = null }
-  }
+  /** (price_1, qty_1) into out(offset), out(offset+1) when a best level
+    * exists; returns the depth, 0 or 1. */
+  def snapshotLongs(out: Array[Long], offset: Int): Int =
+    if (hasBest) { out(offset) = price(bestKey); out(offset + 1) = bestQty; 1 }
+    else 0
 }
 
 /** Two-sided n=1 book over the scalar sides. */
 final class OrderBook1 extends BookKernel {
+  val n = 1
   val bids = new BookSideBasic(isBid = true)
   val asks = new BookSideBasic(isBid = false)
 
@@ -117,10 +159,10 @@ final class OrderBook1 extends BookKernel {
   def setLevel(isBid: Boolean, price: Long, qty: Long): Unit =
     side(isBid).setLevel(price, qty)
 
-  def snapshotInto(out: Array[Any], offset: Int): Unit = {
-    bids.snapshotInto(out, offset)
-    asks.snapshotInto(out, offset + 2)
-  }
+  def snapshotLongs(out: Array[Long]): Int =
+    BookKernel.depths(bids.snapshotLongs(out, 0), asks.snapshotLongs(out, 2))
+
+  def rescans: Long = bids.rescans + asks.rescans
 }
 
 /** Untracked baseline side: a bare level map with best-on-demand (full

@@ -64,21 +64,18 @@ final class BookSide(val isBid: Boolean, val n: Int) {
   def topQty(i: Int): Option[Long] =
     if (i < len) Some(topQtys(i)) else None
 
-  /** Write the top-N snapshot into out(offset until offset+2n) as
-    * (price_1..n, qty_1..n), null-padded. Used by the columnar emitters.
-    */
-  def snapshotInto(out: Array[Any], offset: Int): Unit = {
+  /** Rescans ([[nthBestLevel]] passes over the level map) run so far. */
+  private[core] var rescans = 0L
+
+  /** Write the tracked levels as (price_1..len, qty_1..len) into
+    * out(offset until offset+len) and out(offset+n until offset+n+len);
+    * returns len. Slots past len are left as they were. */
+  def snapshotLongs(out: Array[Long], offset: Int): Int = {
     var i = 0
-    while (i < n) {
-      if (i < len) {
-        out(offset + i) = price(topKeys(i))
-        out(offset + n + i) = topQtys(i)
-      } else {
-        out(offset + i) = null
-        out(offset + n + i) = null
-      }
-      i += 1
+    while (i < len) {
+      out(offset + i) = price(topKeys(i)); out(offset + n + i) = topQtys(i); i += 1
     }
+    len
   }
 
   // ---- top-N cache primitives (reference: order_book/src/top_n_levels.rs) --
@@ -128,6 +125,7 @@ final class BookSide(val isBid: Boolean, val n: Int) {
     * single O(L·m) selection scan instead of a full sort. */
   private def nthBestLevel(m: Int): (Boolean, Long, Long) = {
     if (levels.size <= m) return (false, 0L, 0L)
+    rescans += 1
     // selection of the (m+1) greatest keys; m is small (= n-1)
     val bestK = new Array[Long](m + 1)
     var cnt = 0
@@ -204,7 +202,9 @@ final class BookSide(val isBid: Boolean, val n: Int) {
   def setLevel(p: Long, qty: Long): Unit = {
     val k = key(p)
     if (qty == 0L) {
-      levels.remove(k)
+      // an absent level is not tracked either: nothing to remove or rescan
+      if (!levels.contains(k)) return
+      levels -= k
       if (len == n) {
         if (k >= topKeys(n - 1)) {
           val (hasRepl, rk, rq) = nthBestLevel(n - 1)
@@ -231,6 +231,7 @@ final class BookSide(val isBid: Boolean, val n: Int) {
 /** Two-sided book; routes by `is_bid` like the reference's `BidAskBook`
   * (reference: order_book_core/src/order_book.rs:24-71). */
 final class OrderBook(val n: Int) extends BookKernel {
+  require(n <= 0xFFFF, "n must be <= 65535")
   val bids = new BookSide(isBid = true, n)
   val asks = new BookSide(isBid = false, n)
 
@@ -253,14 +254,10 @@ final class OrderBook(val n: Int) extends BookKernel {
   def setLevel(isBid: Boolean, price: Long, qty: Long): Unit =
     side(isBid).setLevel(price, qty)
 
-  /** Emit the top-N snapshot in the reference's *grouped* field order:
-    * bid_price_1..n, bid_qty_1..n, ask_price_1..n, ask_qty_1..n
-    * (reference: polars_order_book/src/output.rs:89-120). Writes 4n slots
-    * into `out` starting at `offset`. */
-  def snapshotInto(out: Array[Any], offset: Int): Unit = {
-    bids.snapshotInto(out, offset)
-    asks.snapshotInto(out, offset + 2 * n)
-  }
+  def snapshotLongs(out: Array[Long]): Int =
+    BookKernel.depths(bids.snapshotLongs(out, 0), asks.snapshotLongs(out, 2 * n))
+
+  def rescans: Long = bids.rescans + asks.rescans
 }
 
 /** Per-row transition functions — the three public operators' semantics

@@ -2,22 +2,32 @@ package graft.plans
 
 import graft.core.{BookKernel, OrderBookException, Transitions}
 import graft.operators.OrderBookOps
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeRowJoiner
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.bitset.BitSetMethods
 
 /** Whole-operator form of the book replay: a custom LogicalPlan +
   * SparkStrategy + SparkPlan (SURVEY.md §4 "custom pieces actually
   * needed"), the fastest embodiment — the fold runs directly over
-  * UnsafeRows with Spark-planned exchange + sort, no per-row Row boxing
-  * (flatMapGroups) and no per-row aggregation-buffer eval (window form).
+  * UnsafeRows with Spark-planned exchange + sort, no per-row aggregation-
+  * buffer eval (window form). Emitting allocates nothing per row: the
+  * kernel writes its top-N into a reused `Array[Long]`
+  * ([[graft.core.BookKernel.snapshotLongs]]), that fills a reused 4·n-field
+  * UnsafeRow, and one generated joiner appends it to the input UnsafeRow.
+  * The kernel's own level map (`LongMap[Long]`) still boxes on each put
+  * and on each key a rescan visits.
   *
   * Planner contract: `requiredChildDistribution` = clustered on the
   * partition keys (AllTuples when none → single global book) and
@@ -76,22 +86,27 @@ case class BboReplayExec(
 
   override lazy val metrics = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
-    "numBooks" -> SQLMetrics.createMetric(sparkContext, "number of books replayed"))
+    "numBooks" -> SQLMetrics.createMetric(sparkContext, "number of books replayed"),
+    "numRescans" -> SQLMetrics.createMetric(sparkContext, "number of top-N rescans"))
 
   override protected def doExecute(): RDD[InternalRow] = {
     val numOutputRows = longMetric("numOutputRows")
     val numBooks = longMetric("numBooks")
+    val numRescans = longMetric("numRescans")
     val modeL = mode; val nL = n
     val childOutput = child.output
     val priceE = price; val qtyE = qty; val bidE = isBid
     val ppE = prevPrice; val pqE = prevQty
     val keyExprs = partitionKeys
-    val outputAttrs = output
+    val childSchema = DataTypeUtils.fromAttributes(childOutput)
+    val bboSchema = DataTypeUtils.fromAttributes(bboAttrs)
 
     child.execute().mapPartitions { it =>
       val keyProj = UnsafeProjection.create(keyExprs, childOutput)
-      // identity projection materializing (input ++ bbo) to one UnsafeRow
-      val outProj = UnsafeProjection.create(outputAttrs, outputAttrs)
+      // appends the bbo row's 4n fields to the input row's bytes; the
+      // input's variable-length offsets are rebased, nothing is re-encoded
+      val joiner = GenerateUnsafeRowJoiner.create(childSchema, bboSchema)
+      lazy val toUnsafe = UnsafeProjection.create(childOutput, childOutput)
       // plan-time-resolved ordinal readers: the event expressions are
       // bare casts over attributes, so each field is a direct primitive
       // getter — no interpreted Cast.eval, no boxing per row
@@ -100,24 +115,28 @@ case class BboReplayExec(
       val bidF = BboReplayExec.boolField(bidE, childOutput)
       val ppF = ppE.map(BboReplayExec.longField(_, childOutput))
       val pqF = pqE.map(BboReplayExec.longField(_, childOutput))
-      val bboRow = new GenericInternalRow(4 * nL)
-      val joined = new JoinedRow
+      val snap = new Array[Long](4 * nL)
+      val bboRow = UnsafeRow.createFromByteArray(
+        UnsafeRow.calculateBitSetWidthInBytes(4 * nL) + 32 * nL, 4 * nL)
       var book: BookKernel = null
       var curKey: UnsafeRow = null
-      val snap = new Array[Any](4 * nL)
+      def newBook(): Unit = {
+        if (book != null) numRescans += book.rescans
+        book = BookKernel(nL)
+        numBooks += 1
+      }
+      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
+        if (book != null) { numRescans += book.rescans; book = null }
+      })
 
       it.map { row =>
         if (keyExprs.nonEmpty) {
           val k = keyProj(row)
           if (curKey == null || !curKey.equals(k)) {
             curKey = k.copy()
-            book = BookKernel(nL)
-            numBooks += 1
+            newBook()
           }
-        } else if (book == null) {
-          book = BookKernel(nL)
-          numBooks += 1
-        }
+        } else if (book == null) newBook()
 
         if (bidF.isNull(row)) OrderBookException.missingValue("is_bid")
         if (priceF.isNull(row)) OrderBookException.missingValue("price")
@@ -135,15 +154,12 @@ case class BboReplayExec(
               hasPP, if (hasPP) ppF.get.get(row) else 0L,
               hasPQ, if (hasPQ) pqF.get.get(row) else 0L)
         }
-        book.snapshotInto(snap, 0)
-        var i = 0
-        while (i < 4 * nL) {
-          if (snap(i) == null) bboRow.setNullAt(i)
-          else bboRow.setLong(i, snap(i).asInstanceOf[Long])
-          i += 1
-        }
+        BboReplayExec.fillBbo(bboRow, snap, book.snapshotLongs(snap), nL)
         numOutputRows += 1
-        outProj(joined(row, bboRow))
+        joiner.join(row match {
+          case u: UnsafeRow => u
+          case r => toUnsafe(r)
+        }, bboRow)
       }
     }
   }
@@ -154,6 +170,30 @@ case class BboReplayExec(
 
 object BboReplayExec {
   import org.apache.spark.sql.types._
+
+  /** Write a [[BookKernel.snapshotLongs]] snapshot with depths `d` into
+    * the reused 4·n-field `row`: each side's first depth levels as longs,
+    * null past them. Writes the UnsafeRow layout directly (null bitset,
+    * then one 8-byte slot per field); `UnsafeRow.setLong` re-reads and
+    * rewrites the bitset word on every call. */
+  def fillBbo(row: UnsafeRow, snap: Array[Long], d: Int, n: Int): Unit = {
+    val obj = row.getBaseObject; val off = row.getBaseOffset
+    val values = off + UnsafeRow.calculateBitSetWidthInBytes(4 * n)
+    var w = off
+    while (w < values) { Platform.putLong(obj, w, 0L); w += 8 }
+    var block = 0 // bid prices, bid qtys, ask prices, ask qtys
+    while (block < 4) {
+      val depth = if (block < 2) BookKernel.bidDepth(d) else BookKernel.askDepth(d)
+      var i = 0
+      while (i < n) {
+        val slot = block * n + i
+        if (i < depth) Platform.putLong(obj, values + 8L * slot, snap(slot))
+        else { Platform.putLong(obj, values + 8L * slot, 0L); BitSetMethods.set(obj, off, slot) }
+        i += 1
+      }
+      block += 1
+    }
+  }
 
   /** Primitive field reader: `isNull` must be called before `get` on each
     * row (the generic fallback evaluates once in isNull and caches). */

@@ -208,6 +208,46 @@ class BookPropertiesSpec extends AnyFunSuite {
     }
   }
 
+  test("property: snapshotLongs with its depths == snapshotInto on every stream kind") {
+    /** snapshotInto's boxed slots rebuilt from the unboxed snapshot. */
+    def unboxed(book: BookKernel, n: Int): Seq[Any] = {
+      val out = Array.fill(4 * n)(-1L) // stale slots must not leak past a depth
+      val d = book.snapshotLongs(out)
+      def side(base: Int, depth: Int) =
+        (0 until 2 * n).map(i => if (i % n < depth) out(base + i) else null)
+      side(0, BookKernel.bidDepth(d)) ++ side(2 * n, BookKernel.askDepth(d))
+    }
+    def boxed(book: BookKernel, n: Int): Seq[Any] = {
+      val out = new Array[Any](4 * n + 1)
+      book.snapshotInto(out, 1)
+      out.toSeq.drop(1)
+    }
+    for (n <- Seq(1, 2, 5)) {
+      checkProp(s"unboxed-updates n=$n", Prop.forAll(Gen.listOfN(120, genUpdate)) { evs =>
+        val book = BookKernel(n)
+        evs.forall { case (isBid, p, q) =>
+          Transitions.applyUpdate(book, isBid, p, q)
+          unboxed(book, n) == boxed(book, n)
+        }
+      })
+      checkProp(s"unboxed-mutations n=$n", Prop.forAll(Gen.listOfN(100, genRawMut)) { raw =>
+        val book = BookKernel(n)
+        validMutations(raw).forall { case (isBid, p, q) =>
+          Transitions.applyMutation(book, isBid, p, q)
+          unboxed(book, n) == boxed(book, n)
+        }
+      })
+      checkProp(s"unboxed-modify n=$n", Prop.forAll(genModifyStream(80)) { evs =>
+        val book = BookKernel(n)
+        evs.forall { ev =>
+          Transitions.applyMutationWithModify(book, ev.isBid, ev.price, ev.qty,
+            ev.hasPrevPrice, ev.prevPrice, ev.hasPrevQty, ev.prevQty)
+          unboxed(book, n) == boxed(book, n)
+        }
+      })
+    }
+  }
+
   test("property: bid/ask mirror — negated prices on the other side track the same book") {
     for (n <- Seq(2, 5)) {
       checkProp(s"mirror n=$n", Prop.forAll(Gen.listOfN(100, genUpdate)) { evs =>

@@ -114,6 +114,23 @@ class CoreBookSpec extends AnyFunSuite {
     assert(snapshot(book) == Seq(Some(5L), None, Some(10L), None, None, None, None, None))
   }
 
+  test("updates: qty=0 on an absent level inside the full cache's range runs no rescan") {
+    val book = new OrderBook(2)
+    (1L to 5L).foreach(p => Transitions.applyUpdate(book, isBid = true, p, p * 10))
+    (10L to 14L).foreach(p => Transitions.applyUpdate(book, isBid = false, p, p))
+    val full = Seq(Some(5L), Some(4L), Some(50L), Some(40L), Some(10L), Some(11L), Some(10L), Some(11L))
+    assert(snapshot(book) == full && book.rescans == 0)
+    // absent prices better than the worst tracked level (bid 4, ask 11)
+    Transitions.applyUpdate(book, isBid = true, 7L, 0L)
+    Transitions.applyUpdate(book, isBid = true, 6L, 0L)
+    Transitions.applyUpdate(book, isBid = false, 9L, 0L)
+    assert(snapshot(book) == full && book.rescans == 0)
+    // a tracked removal still rescans and refills from the map
+    Transitions.applyUpdate(book, isBid = true, 5L, 0L)
+    assert(book.rescans == 1)
+    assert(snapshot(book) == Seq(Some(4L), Some(3L), Some(40L), Some(30L)) ++ full.drop(4))
+  }
+
   test("updates: set overwrites, zero removes, eviction refills from map") {
     val book = new OrderBook(2)
     // bids at 1..5; top-2 = (5,4)
