@@ -3,7 +3,9 @@ package graft.core
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 /** Compact binary codec for OrderBook state — used by the window-function
-  * form's aggregation-buffer spill path and the streaming state store. */
+  * form's aggregation-buffer spill path, the streaming state store, the
+  * checkpoint snapshots (`BookCheckpoint`) and the checkpoint restore in
+  * `BboReplayExec`. */
 object BookCodec {
 
   def serialize(book: OrderBook): Array[Byte] = {

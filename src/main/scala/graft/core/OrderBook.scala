@@ -266,6 +266,18 @@ final class OrderBook(val n: Int) extends BookKernel {
   * them. */
 object Transitions {
 
+  /** One event under `mode` (0 O1 updates, 1 O2 mutations, 2 O3 modify):
+    * the dispatch every replay form shares. Only O3 reads the prev
+    * arguments. */
+  def apply(mode: Int, book: BookKernel, isBid: Boolean, price: Long, qty: Long,
+            hasPrevPrice: Boolean, prevPrice: Long,
+            hasPrevQty: Boolean, prevQty: Long): Unit = mode match {
+    case 0 => applyUpdate(book, isBid, price, qty)
+    case 1 => applyMutation(book, isBid, price, qty)
+    case 2 => applyMutationWithModify(book, isBid, price, qty,
+      hasPrevPrice, prevPrice, hasPrevQty, prevQty)
+  }
+
   /** O1 — price updates (level snapshots): always set_level.
     * Reference: update.rs:101-105. */
   def applyUpdate(book: BookKernel, isBid: Boolean, price: Long, qty: Long): Unit =

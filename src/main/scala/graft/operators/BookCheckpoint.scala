@@ -20,23 +20,17 @@ import org.apache.spark.sql.types._
   *
   * Scale model matches the replay operators: one group = one book = one
   * task; the checkpoint relation is one narrow row per group (bounded
-  * by live levels, independent of event count), so the state side of
-  * the resume cogroup is broadcast-small in any real regime. The
-  * stored state pins n — resuming at a different n fails loudly (the
-  * pinned-geometry discipline every persisted artifact here follows).
+  * by live levels, independent of event count). Resume runs through the
+  * replay operator itself ([[graft.plans.BboReplayExec]]): each state
+  * row becomes a lead row ranked before its group's events, which
+  * restores the book, and its output row is dropped. The stored state
+  * pins n — resuming at a different n fails loudly (the pinned-geometry
+  * discipline every persisted artifact here follows).
+  *
+  * `mode` below is the replay operators' 0 O1, 1 O2, 2 O3; `prev` names
+  * O3's prev price and qty columns.
   */
 object BookCheckpoint {
-
-  import OrderBookOps.bboFieldNames
-
-  /** Which of the three reference entry points (update.rs:95-163) the
-    * fold replays; Modify carries the nullable prev columns. */
-  private sealed trait Mode { def prev: Option[(String, String)] = None }
-  private case object Updates extends Mode
-  private case object Mutations extends Mode
-  private final case class Modify(prevPrice: String, prevQty: String) extends Mode {
-    override def prev: Option[(String, String)] = Some((prevPrice, prevQty))
-  }
 
   /** Final book state per group after replaying `df` (O1 level-snapshot
     * transitions) in `orderBy` order: (partition cols..., book_state).
@@ -44,7 +38,7 @@ object BookCheckpoint {
   def bookStateSnapshots(df: DataFrame, price: String, qty: String,
                          isBid: String, n: Int, partitionBy: Seq[String],
                          orderBy: Seq[String]): DataFrame =
-    snapshots(df, price, qty, isBid, n, partitionBy, orderBy, Updates)
+    snapshots(df, 0, price, qty, isBid, None, n, partitionBy, orderBy)
 
   /** [[bookStateSnapshots]] for the O2 transition (signed quantity
     * MUTATIONS fold into levels) — the checkpoint for mutation-stream
@@ -53,7 +47,7 @@ object BookCheckpoint {
                                       qty: String, isBid: String, n: Int,
                                       partitionBy: Seq[String],
                                       orderBy: Seq[String]): DataFrame =
-    snapshots(df, price, qty, isBid, n, partitionBy, orderBy, Mutations)
+    snapshots(df, 1, price, qty, isBid, None, n, partitionBy, orderBy)
 
   /** [[bookStateSnapshots]] for the O3 transition (mutation-with-modify,
     * the reference's 9-case table at update.rs:132-161) — completes the
@@ -62,18 +56,18 @@ object BookCheckpoint {
       df: DataFrame, price: String, qty: String, isBid: String,
       prevPrice: String, prevQty: String, n: Int,
       partitionBy: Seq[String], orderBy: Seq[String]): DataFrame =
-    snapshots(df, price, qty, isBid, n, partitionBy, orderBy,
-      Modify(prevPrice, prevQty))
+    snapshots(df, 2, price, qty, isBid, Some((prevPrice, prevQty)), n,
+      partitionBy, orderBy)
 
-  private def snapshots(df: DataFrame, price: String, qty: String,
-                        isBid: String, n: Int, partitionBy: Seq[String],
-                        orderBy: Seq[String], mode: Mode): DataFrame = {
-    require(n >= 1 && n <= 20, s"Unsupported number of levels: $n")
+  private def snapshots(df: DataFrame, mode: Int, price: String, qty: String,
+                        isBid: String, prev: Option[(String, String)], n: Int,
+                        partitionBy: Seq[String], orderBy: Seq[String]): DataFrame = {
+    OrderBookOps.requireLevels(n)
     require(orderBy.nonEmpty,
       "orderBy must be non-empty: book replay is order-sensitive")
     require(!df.columns.contains("book_state"),
       "Input already has output column book_state")
-    val withEv = castedEvents(df, price, qty, isBid, mode)
+    val withEv = castedEvents(df, price, qty, isBid, prev)
     val numIn = df.schema.size
     val keySchema = StructType(partitionBy.map(c =>
       df.schema(df.schema.fieldIndex(c))).toArray)
@@ -119,16 +113,16 @@ object BookCheckpoint {
                                 n: Int, partitionBy: Seq[String],
                                 orderBy: Seq[String],
                                 stateCol: String = "book_state"): DataFrame =
-    resumedSnapshots(df, states, price, qty, isBid, n, partitionBy,
-      orderBy, stateCol, Updates)
+    resumedSnapshots(df, states, 0, price, qty, isBid, None, n, partitionBy,
+      orderBy, stateCol)
 
   /** [[bookStateSnapshotsResumed]] for the O2 mutation transition. */
   def bookStateSnapshotsResumedFromMutations(
       df: DataFrame, states: DataFrame, price: String, qty: String,
       isBid: String, n: Int, partitionBy: Seq[String],
       orderBy: Seq[String], stateCol: String = "book_state"): DataFrame =
-    resumedSnapshots(df, states, price, qty, isBid, n, partitionBy,
-      orderBy, stateCol, Mutations)
+    resumedSnapshots(df, states, 1, price, qty, isBid, None, n, partitionBy,
+      orderBy, stateCol)
 
   /** [[bookStateSnapshotsResumed]] for the O3 modify transition. */
   def bookStateSnapshotsResumedFromMutationsWithModify(
@@ -136,15 +130,15 @@ object BookCheckpoint {
       isBid: String, prevPrice: String, prevQty: String, n: Int,
       partitionBy: Seq[String], orderBy: Seq[String],
       stateCol: String = "book_state"): DataFrame =
-    resumedSnapshots(df, states, price, qty, isBid, n, partitionBy,
-      orderBy, stateCol, Modify(prevPrice, prevQty))
+    resumedSnapshots(df, states, 2, price, qty, isBid,
+      Some((prevPrice, prevQty)), n, partitionBy, orderBy, stateCol)
 
-  private def resumedSnapshots(df: DataFrame, states: DataFrame,
+  private def resumedSnapshots(df: DataFrame, states: DataFrame, mode: Int,
                                price: String, qty: String, isBid: String,
-                               n: Int, partitionBy: Seq[String],
-                               orderBy: Seq[String], stateCol: String,
-                               mode: Mode): DataFrame = {
-    require(n >= 1 && n <= 20, s"Unsupported number of levels: $n")
+                               prev: Option[(String, String)], n: Int,
+                               partitionBy: Seq[String],
+                               orderBy: Seq[String], stateCol: String): DataFrame = {
+    OrderBookOps.requireLevels(n)
     require(orderBy.nonEmpty,
       "orderBy must be non-empty: book replay is order-sensitive")
     require(partitionBy.nonEmpty,
@@ -155,7 +149,7 @@ object BookCheckpoint {
     // stateCol chain breaks on its second day
     require(!df.columns.contains(stateCol),
       s"Input already has output column $stateCol")
-    val withEv = castedEvents(df, price, qty, isBid, mode)
+    val withEv = castedEvents(df, price, qty, isBid, prev)
     val numIn = df.schema.size
     val keySchema = StructType(partitionBy.map(c =>
       df.schema(df.schema.fieldIndex(c))).toArray)
@@ -218,8 +212,8 @@ object BookCheckpoint {
                                        partitionBy: Seq[String],
                                        orderBy: Seq[String],
                                        stateCol: String = "book_state"): DataFrame =
-    resume(df, states, price, qty, isBid, n, partitionBy, orderBy,
-      stateCol, Updates)
+    resume(df, states, 0, price, qty, isBid, None, n, partitionBy, orderBy,
+      stateCol)
 
   /** [[resumeTopNLevelsFromPriceUpdates]] for the O2 transition. */
   def resumeTopNLevelsFromPriceMutations(df: DataFrame, states: DataFrame,
@@ -228,8 +222,8 @@ object BookCheckpoint {
                                          partitionBy: Seq[String],
                                          orderBy: Seq[String],
                                          stateCol: String = "book_state"): DataFrame =
-    resume(df, states, price, qty, isBid, n, partitionBy, orderBy,
-      stateCol, Mutations)
+    resume(df, states, 1, price, qty, isBid, None, n, partitionBy, orderBy,
+      stateCol)
 
   /** [[resumeTopNLevelsFromPriceUpdates]] for the O3 transition —
     * day-2 modify streams continue from the day-1 state. Rows whose
@@ -242,74 +236,43 @@ object BookCheckpoint {
       prevPrice: String, prevQty: String, n: Int,
       partitionBy: Seq[String], orderBy: Seq[String],
       stateCol: String = "book_state"): DataFrame =
-    resume(df, states, price, qty, isBid, n, partitionBy, orderBy,
-      stateCol, Modify(prevPrice, prevQty))
+    resume(df, states, 2, price, qty, isBid, Some((prevPrice, prevQty)), n,
+      partitionBy, orderBy, stateCol)
 
-  private def resume(df: DataFrame, states: DataFrame,
-                     price: String, qty: String,
-                     isBid: String, n: Int,
-                     partitionBy: Seq[String],
-                     orderBy: Seq[String],
-                     stateCol: String,
-                     mode: Mode): DataFrame = {
-    require(n >= 1 && n <= 20, s"Unsupported number of levels: $n")
+  private def resume(df: DataFrame, states: DataFrame, mode: Int,
+                     price: String, qty: String, isBid: String,
+                     prev: Option[(String, String)], n: Int,
+                     partitionBy: Seq[String], orderBy: Seq[String],
+                     stateCol: String): DataFrame = {
+    // checked here: the replay below always sees "__rank" +: orderBy
     require(orderBy.nonEmpty,
       "orderBy must be non-empty: book replay is order-sensitive")
     require(partitionBy.nonEmpty,
       "resume requires partition keys; add a constant key column for a " +
         "single global book")
-    val clash = df.columns.toSet.intersect(bboFieldNames(n).toSet)
-    require(clash.isEmpty, s"Input already has output columns: $clash")
-
-    val withEv = castedEvents(df, price, qty, isBid, mode)
-    val numIn = df.schema.size
-    val outSchema = StructType(df.schema.fields ++
-      bboFieldNames(n).map(StructField(_, LongType, nullable = true)))
-    implicit val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    val keySchema = StructType(partitionBy.map(c =>
-      df.schema(df.schema.fieldIndex(c))).toArray)
-    val keyEnc: Encoder[Row] = Encoders.row(keySchema)
-    val evKeyIdx = partitionBy.map(withEv.schema.fieldIndex).toArray
-    val stKeyIdx = partitionBy.map(states.schema.fieldIndex).toArray
-    val stStateIdx = states.schema.fieldIndex(stateCol)
-    val sortCols = orderBy.map(col)
-    val width = numIn + 4 * n
-
-    withEv.groupByKey(rowKey(evKeyIdx, keySchema))(keyEnc)
-      .cogroupSorted(
-        states.groupByKey(rowKey(stKeyIdx, keySchema))(keyEnc))(
-        sortCols: _*)() { (key, evIt, stIt) =>
-        val stateRows = stIt.take(2).toList
-        require(stateRows.size <= 1,
-          s"resume: multiple checkpoint rows for group ${key.toSeq.mkString(",")}")
-        val book = stateRows match {
-          case r :: Nil => BookCodec.deserialize(
-            r.getAs[Array[Byte]](stStateIdx))
-          case _ => new OrderBook(n)
-        }
-        require(book.n == n,
-          s"checkpoint was built at n=${book.n}; resume requested n=$n " +
-            "(the stored state pins n — rebuild the checkpoint to change it)")
-        evIt.map { row =>
-          applyRow(book, row, numIn, price, qty, isBid, mode)
-          val out = new Array[Any](width)
-          var i = 0
-          while (i < numIn) { out(i) = row.get(i); i += 1 }
-          book.snapshotInto(out, numIn)
-          new GenericRowWithSchema(out, outSchema): Row
-        }
-      }
+    val internal = Seq("__state", "__rank")
+    val clash = df.columns.toSet.intersect(internal.toSet)
+    require(clash.isEmpty, s"Input already has internal columns: $clash")
+    val events = df.withColumn("__state", lit(null).cast(BinaryType))
+      .withColumn("__rank", lit(1))
+    val leads = states.select(OrderBookOps.leadColumns(df.schema,
+        partitionBy.map(k => k -> col(k)).toMap) ++
+      Seq(col(stateCol).as("__state"), lit(0).as("__rank")): _*)
+    OrderBookOps.replay(events.unionByName(leads), mode, price, qty, isBid,
+        prev, n, partitionBy, "__rank" +: orderBy, state = Some("__state"))
+      .filter(col("__rank") === 1)
+      .drop(internal: _*)
   }
 
   /** Shared event casting: appends __g_price/__g_qty/__g_isbid (and, for
-    * Modify, the nullable __g_pprice/__g_pqty) after the passthrough
-    * columns (read by the folds, never emitted). */
+    * O3, the nullable __g_pprice/__g_pqty) after the passthrough columns
+    * (read by the folds, never emitted). */
   private def castedEvents(df: DataFrame, price: String, qty: String,
-                           isBid: String, mode: Mode): DataFrame = {
+                           isBid: String, prev: Option[(String, String)]): DataFrame = {
     val base = df.withColumn("__g_price", col(price).cast(LongType))
       .withColumn("__g_qty", col(qty).cast(LongType))
       .withColumn("__g_isbid", col(isBid).cast(BooleanType))
-    mode.prev.fold(base) { case (pp, pq) =>
+    prev.fold(base) { case (pp, pq) =>
       base.withColumn("__g_pprice", col(pp).cast(LongType))
         .withColumn("__g_pqty", col(pq).cast(LongType))
     }
@@ -318,26 +281,18 @@ object BookCheckpoint {
   /** One O1/O2/O3 transition with the replay operators' null contract. */
   private def applyRow(book: OrderBook, row: Row, numIn: Int,
                        price: String, qty: String,
-                       isBid: String, mode: Mode): Unit = {
+                       isBid: String, mode: Int): Unit = {
     val iPrice = numIn; val iQty = numIn + 1; val iBid = numIn + 2
+    val iPp = numIn + 3; val iPq = numIn + 4
     if (row.isNullAt(iBid)) OrderBookException.missingValue(isBid)
     if (row.isNullAt(iPrice)) OrderBookException.missingValue(price)
     if (row.isNullAt(iQty)) OrderBookException.missingValue(qty)
-    mode match {
-      case Updates =>
-        Transitions.applyUpdate(book, row.getBoolean(iBid),
-          row.getLong(iPrice), row.getLong(iQty))
-      case Mutations =>
-        Transitions.applyMutation(book, row.getBoolean(iBid),
-          row.getLong(iPrice), row.getLong(iQty))
-      case Modify(_, _) =>
-        val iPp = numIn + 3; val iPq = numIn + 4
-        val hasPp = !row.isNullAt(iPp); val hasPq = !row.isNullAt(iPq)
-        Transitions.applyMutationWithModify(book, row.getBoolean(iBid),
-          row.getLong(iPrice), row.getLong(iQty),
-          hasPp, if (hasPp) row.getLong(iPp) else 0L,
-          hasPq, if (hasPq) row.getLong(iPq) else 0L)
-    }
+    val hasPp = mode == 2 && !row.isNullAt(iPp)
+    val hasPq = mode == 2 && !row.isNullAt(iPq)
+    Transitions(mode, book, row.getBoolean(iBid),
+      row.getLong(iPrice), row.getLong(iQty),
+      hasPp, if (hasPp) row.getLong(iPp) else 0L,
+      hasPq, if (hasPq) row.getLong(iPq) else 0L)
   }
 
   private def rowKey(keyIdx: Array[Int], keySchema: StructType): Row => Row =

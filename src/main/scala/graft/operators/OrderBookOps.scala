@@ -1,9 +1,7 @@
 package graft.operators
 
-import graft.core.{OrderBook, OrderBookException, Transitions}
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,9 +10,12 @@ import org.apache.spark.sql.types._
   *
   * The kernel is a per-group, strictly ordered, stateful 1-row-in →
   * 1-row-out fold, which Spark cannot express as an associative aggregate
-  * (no valid merge). The idiomatic embodiment is a shuffle on the partition
-  * keys followed by a sorted per-group fold:
-  * `groupByKey(partitionBy).flatMapSortedGroups(orderBy)(replay)`.
+  * (no valid merge). It runs as one custom operator
+  * ([[graft.plans.BboReplayExec]]): Spark plans a shuffle on the partition
+  * keys and an in-partition sort on (keys, order), and the exec folds the
+  * sorted rows with the `graft.core` kernel. Plain, decimal, parallel and
+  * resumed replays all emit their rows from it; the window aggregate
+  * ([[graft.plans.BboWindow]]) is the Column/SQL surface.
   *
   * Scale model: one order book (= one `partitionBy` group, e.g. one
   * product) is replayed by exactly one task; distinct products replay in
@@ -37,10 +38,11 @@ object OrderBookOps {
     (1 to n).map(i => s"bid_price_$i") ++ (1 to n).map(i => s"bid_qty_$i") ++
       (1 to n).map(i => s"ask_price_$i") ++ (1 to n).map(i => s"ask_qty_$i")
 
-  private sealed trait Mode
-  private case object Updates extends Mode
-  private case object Mutations extends Mode
-  private case object Modify extends Mode
+  /** The replay APIs' level bound, as the reference words it
+    * (calculate_bbo.rs:117-127). The core kernel handles any n >= 1; the
+    * bound is a public-API contract, checked when the query is built. */
+  def requireLevels(n: Int): Unit =
+    require(n >= 1 && n <= 20, s"Unsupported number of levels: $n")
 
   /** O1 — replay level snapshots: qty>0 sets the level's qty, qty==0
     * removes it. Reference: __init__.py:157-210,
@@ -48,14 +50,14 @@ object OrderBookOps {
   def topNLevelsFromPriceUpdates(
       df: DataFrame, price: String, qty: String, isBid: String, n: Int,
       partitionBy: Seq[String], orderBy: Seq[String]): DataFrame =
-    replayExec(df, price, qty, isBid, None, None, n, partitionBy, orderBy, 0)
+    replay(df, 0, price, qty, isBid, None, n, partitionBy, orderBy)
 
   /** O2 — replay signed deltas: qty>0 adds, qty<0 deletes |qty|, qty==0
     * no-op. Reference: __init__.py:101-154, calculate_bbo.rs:172-215. */
   def topNLevelsFromPriceMutations(
       df: DataFrame, price: String, qty: String, isBid: String, n: Int,
       partitionBy: Seq[String], orderBy: Seq[String]): DataFrame =
-    replayExec(df, price, qty, isBid, None, None, n, partitionBy, orderBy, 1)
+    replay(df, 1, price, qty, isBid, None, n, partitionBy, orderBy)
 
   /** O3 — as O2 plus modify (move/resize an order) when prev_price/prev_qty
     * are set; both-or-neither semantics per row enforced by the 9-case
@@ -65,8 +67,8 @@ object OrderBookOps {
       df: DataFrame, price: String, qty: String, isBid: String,
       prevPrice: String, prevQty: String, n: Int,
       partitionBy: Seq[String], orderBy: Seq[String]): DataFrame =
-    replayExec(df, price, qty, isBid, Some(prevPrice), Some(prevQty), n,
-      partitionBy, orderBy, 2)
+    replay(df, 2, price, qty, isBid, Some((prevPrice, prevQty)), n,
+      partitionBy, orderBy)
 
   // ---- Column-typed overloads ------------------------------------------
   // The reference's primary API accepts `pl.Expr | str` (_utils.py:15-52);
@@ -114,38 +116,20 @@ object OrderBookOps {
       .drop(evNames ++ pbNames ++ obNames: _*)
   }
 
-  /** flatMapSortedGroups embodiments — kept as the cross-implementation
-    * oracle for the custom physical operator (same results, Row-based). */
-  def topNLevelsFromPriceUpdatesViaGroups(
-      df: DataFrame, price: String, qty: String, isBid: String, n: Int,
-      partitionBy: Seq[String], orderBy: Seq[String]): DataFrame =
-    replay(df, price, qty, isBid, None, None, n, partitionBy, orderBy, Updates)
-
-  def topNLevelsFromPriceMutationsViaGroups(
-      df: DataFrame, price: String, qty: String, isBid: String, n: Int,
-      partitionBy: Seq[String], orderBy: Seq[String]): DataFrame =
-    replay(df, price, qty, isBid, None, None, n, partitionBy, orderBy, Mutations)
-
-  def topNLevelsFromPriceMutationsWithModifyViaGroups(
-      df: DataFrame, price: String, qty: String, isBid: String,
-      prevPrice: String, prevQty: String, n: Int,
-      partitionBy: Seq[String], orderBy: Seq[String]): DataFrame =
-    replay(df, price, qty, isBid, Some(prevPrice), Some(prevQty), n,
-      partitionBy, orderBy, Modify)
-
-  /** Fast path: plan the replay as the custom BboReplayNode — Spark
-    * inserts the (single) exchange + sort; the fold runs over UnsafeRows
-    * in BboReplayExec. */
-  private def replayExec(
-      df: DataFrame, price: String, qty: String, isBid: String,
-      prevPrice: Option[String], prevQty: Option[String], n: Int,
-      partitionBy: Seq[String], orderBy: Seq[String], mode: Int): DataFrame = {
+  /** Plan the replay as the custom BboReplayNode: Spark inserts the one
+    * exchange and sort, and the fold runs over UnsafeRows in
+    * BboReplayExec. `mode` is 0 O1, 1 O2, 2 O3 (`prev` names O3's prev
+    * price and qty columns). A non-null binary in the `state` column
+    * restores the row's book from a [[graft.core.BookCodec]] blob and
+    * folds no event (checkpoint resume; see [[BookCheckpoint]]). */
+  private[operators] def replay(
+      df: DataFrame, mode: Int, price: String, qty: String, isBid: String,
+      prev: Option[(String, String)], n: Int,
+      partitionBy: Seq[String], orderBy: Seq[String],
+      state: Option[String] = None): DataFrame = {
     import graft.plans.{BboReplayNode, BboReplayStrategy}
     import org.apache.spark.sql.GraftColumnBridge
-    // Contract parity with the reference: n outside 1..=20 is rejected with
-    // the same message (calculate_bbo.rs:117-127). The core OrderBook
-    // itself handles any n >= 1 — the bound is a public-API contract.
-    require(n >= 1 && n <= 20, s"Unsupported number of levels: $n")
+    requireLevels(n)
     require(orderBy.nonEmpty,
       "orderBy must be non-empty: Spark provides no implicit row order, and " +
         "book replay is order-sensitive (reference README.md:182)")
@@ -166,14 +150,24 @@ object OrderBookOps {
       asLong(price),
       asLong(qty),
       catalyst.expressions.Cast(attr(isBid), BooleanType),
-      prevPrice.map(asLong),
-      prevQty.map(asLong),
+      prev.map(p => asLong(p._1)),
+      prev.map(p => asLong(p._2)),
+      state.map(attr),
       partitionBy.map(attr(_): catalyst.expressions.Expression),
       orderBy.map(attr(_): catalyst.expressions.Expression),
       BboReplayNode.mkBboAttrs(n),
       analyzed)
     GraftColumnBridge.ofRows(spark, node)
   }
+
+  /** Columns of a lead row shaped like `schema`: each field takes its
+    * value from `values` cast to the field's type, or null. Lead rows
+    * (ranked before a group's events) carry a book's starting state into
+    * the replay: checkpoint resume and parallel replay's segment seeds. */
+  private[operators] def leadColumns(schema: StructType,
+                                     values: Map[String, Column]): Seq[Column] =
+    schema.fields.toSeq.map(f =>
+      values.getOrElse(f.name, lit(null)).cast(f.dataType).as(f.name))
 
   /** Re-assemble the flat bbo columns into a single struct column, the
     * reference's pre-`unnest` shape (reference: README.md:34). */
@@ -185,87 +179,4 @@ object OrderBookOps {
   /** Spark equivalent of Polars `unnest` (reference: README.md:34, 67). */
   def unnestStruct(df: DataFrame, structCol: String): DataFrame =
     df.select(col("*"), col(structCol + ".*")).drop(structCol)
-
-  private def replay(
-      df: DataFrame, price: String, qty: String, isBid: String,
-      prevPrice: Option[String], prevQty: Option[String], n: Int,
-      partitionBy: Seq[String], orderBy: Seq[String], mode: Mode): DataFrame = {
-    // Contract parity with the reference: n outside 1..=20 is rejected with
-    // the same message (calculate_bbo.rs:117-127). The core OrderBook
-    // itself handles any n >= 1 — the bound is a public-API contract.
-    require(n >= 1 && n <= 20, s"Unsupported number of levels: $n")
-    require(orderBy.nonEmpty,
-      "orderBy must be non-empty: Spark provides no implicit row order, and " +
-        "book replay is order-sensitive (reference README.md:182)")
-    val clash = df.columns.toSet.intersect(bboFieldNames(n).toSet)
-    require(clash.isEmpty, s"Input already has output columns: $clash")
-
-    val outSchema = StructType(df.schema.fields ++
-      bboFieldNames(n).map(StructField(_, LongType, nullable = true)))
-    val numIn = df.schema.size
-
-    // Internal casted event columns appended after the passthrough columns;
-    // they are read by the fold and never emitted.
-    val withEv0 = df
-      .withColumn("__g_price", col(price).cast(LongType))
-      .withColumn("__g_qty", col(qty).cast(LongType))
-      .withColumn("__g_isbid", col(isBid).cast(BooleanType))
-    val withEv = mode match {
-      case Modify => withEv0
-        .withColumn("__g_pprice", col(prevPrice.get).cast(LongType))
-        .withColumn("__g_pqty", col(prevQty.get).cast(LongType))
-      case _ => withEv0
-    }
-    val iPrice = numIn; val iQty = numIn + 1; val iBid = numIn + 2
-    val iPPrice = numIn + 3; val iPQty = numIn + 4
-
-    def replayGroup(it: Iterator[Row]): Iterator[Row] = {
-      val book = new OrderBook(n)
-      val width = numIn + 4 * n
-      it.map { row =>
-        if (row.isNullAt(iBid)) OrderBookException.missingValue(isBid)
-        if (row.isNullAt(iPrice)) OrderBookException.missingValue(price)
-        if (row.isNullAt(iQty)) OrderBookException.missingValue(qty)
-        val b = row.getBoolean(iBid)
-        val p = row.getLong(iPrice)
-        val q = row.getLong(iQty)
-        mode match {
-          case Updates   => Transitions.applyUpdate(book, b, p, q)
-          case Mutations => Transitions.applyMutation(book, b, p, q)
-          case Modify =>
-            val hasPP = !row.isNullAt(iPPrice)
-            val hasPQ = !row.isNullAt(iPQty)
-            Transitions.applyMutationWithModify(book, b, p, q,
-              hasPP, if (hasPP) row.getLong(iPPrice) else 0L,
-              hasPQ, if (hasPQ) row.getLong(iPQty) else 0L)
-        }
-        val out = new Array[Any](width)
-        var i = 0
-        while (i < numIn) { out(i) = row.get(i); i += 1 }
-        book.snapshotInto(out, numIn)
-        new GenericRowWithSchema(out, outSchema): Row
-      }
-    }
-
-    implicit val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    val sortCols = orderBy.map(col)
-
-    if (partitionBy.isEmpty) {
-      // Single global book: one group, one task. Valid but serial — callers
-      // with multiple products should pass partition keys.
-      withEv.groupByKey(_ => 0)(Encoders.scalaInt)
-        .flatMapSortedGroups(sortCols: _*)((_, it) => replayGroup(it))
-    } else {
-      val keySchema = StructType(partitionBy.map(c =>
-        df.schema(df.schema.fieldIndex(c))).toArray)
-      val keyIdx = partitionBy.map(withEv.schema.fieldIndex).toArray
-      val keyEnc: Encoder[Row] = Encoders.row(keySchema)
-      withEv.groupByKey { r =>
-        val vs = new Array[Any](keyIdx.length)
-        var i = 0
-        while (i < keyIdx.length) { vs(i) = r.get(keyIdx(i)); i += 1 }
-        new GenericRowWithSchema(vs, keySchema): Row
-      }(keyEnc).flatMapSortedGroups(sortCols: _*)((_, it) => replayGroup(it))
-    }
-  }
 }

@@ -145,7 +145,7 @@ object ParallelReplay {
       partitionBy: String, orderBy: String, segments: Int,
       mutation: Boolean, modifyCols: Option[(String, String)] = None): DataFrame = {
     require(segments >= 1, "segments must be >= 1")
-    require(n >= 1 && n <= 20, s"Unsupported number of levels: $n")
+    OrderBookOps.requireLevels(n)
     // The segment fold's max_by tiebreak and the segmentation both read the
     // order column through cast(long); a timestamp cast TRUNCATES to whole
     // seconds, which would make sub-second-distinct events tie in max_by
@@ -247,11 +247,8 @@ object ParallelReplay {
     val seedSide = entering
       .filter(col("__q0") =!= 0L)
       .select(
-        df.schema.fields.map { f =>
-          if (f.name == partitionBy) col("__p").cast(f.dataType).as(f.name)
-          else if (f.name == orderBy) lit(0).cast(f.dataType).as(f.name)
-          else lit(null).cast(f.dataType).as(f.name)
-        }.toSeq ++ Seq(
+        OrderBookOps.leadColumns(df.schema,
+          Map(partitionBy -> col("__p"), orderBy -> lit(0))) ++ Seq(
           col("__target").as("__seg"),
           col("__px").as("__g_price"),
           col("__q0").as("__g_qty"),

@@ -1,12 +1,12 @@
 package graft.plans
 
-import graft.core.{BookKernel, OrderBookException, Transitions}
+import graft.core.{BookCodec, BookKernel, OrderBookException, Transitions}
 import graft.operators.OrderBookOps
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkStrategy
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeRowJoiner
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -35,12 +35,19 @@ import org.apache.spark.unsafe.bitset.BitSetMethods
   * EnsureRequirements inserts exactly one hash exchange and one
   * in-partition sort — the same minimal plan as a window function, with a
   * straight-line fold instead of frame machinery.
+  *
+  * `state` is an internal input for checkpoint resume
+  * ([[graft.operators.BookCheckpoint]]): a row whose binary state is
+  * non-null restores its group's book from a [[graft.core.BookCodec]]
+  * blob instead of folding an event. Resume ranks such rows before the
+  * group's events and drops their output rows.
   */
 case class BboReplayNode(
     mode: Int, // 0 updates, 1 mutations, 2 modify
     n: Int,
     price: Expression, qty: Expression, isBid: Expression,
     prevPrice: Option[Expression], prevQty: Option[Expression],
+    state: Option[Expression],
     partitionKeys: Seq[Expression],
     orderKeys: Seq[Expression],
     bboAttrs: Seq[Attribute],
@@ -65,6 +72,7 @@ case class BboReplayExec(
     mode: Int, n: Int,
     price: Expression, qty: Expression, isBid: Expression,
     prevPrice: Option[Expression], prevQty: Option[Expression],
+    state: Option[Expression],
     partitionKeys: Seq[Expression],
     orderKeys: Seq[Expression],
     bboAttrs: Seq[Attribute],
@@ -87,16 +95,22 @@ case class BboReplayExec(
   override lazy val metrics = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
     "numBooks" -> SQLMetrics.createMetric(sparkContext, "number of books replayed"),
-    "numRescans" -> SQLMetrics.createMetric(sparkContext, "number of top-N rescans"))
+    "numRescans" -> SQLMetrics.createMetric(sparkContext, "number of top-N rescans"),
+    "numRestored" -> SQLMetrics.createMetric(sparkContext,
+      "number of books restored from a checkpoint"))
 
   override protected def doExecute(): RDD[InternalRow] = {
     val numOutputRows = longMetric("numOutputRows")
     val numBooks = longMetric("numBooks")
     val numRescans = longMetric("numRescans")
+    val numRestored = longMetric("numRestored")
     val modeL = mode; val nL = n
     val childOutput = child.output
     val priceE = price; val qtyE = qty; val bidE = isBid
     val ppE = prevPrice; val pqE = prevQty
+    val stateIdx = state.fold(-1) {
+      case a: Attribute => childOutput.indexWhere(_.exprId == a.exprId)
+    }
     val keyExprs = partitionKeys
     val childSchema = DataTypeUtils.fromAttributes(childOutput)
     val bboSchema = DataTypeUtils.fromAttributes(bboAttrs)
@@ -113,17 +127,36 @@ case class BboReplayExec(
       val priceF = BboReplayExec.longField(priceE, childOutput)
       val qtyF = BboReplayExec.longField(qtyE, childOutput)
       val bidF = BboReplayExec.boolField(bidE, childOutput)
-      val ppF = ppE.map(BboReplayExec.longField(_, childOutput))
-      val pqF = pqE.map(BboReplayExec.longField(_, childOutput))
+      val ppF = ppE.fold(BboReplayExec.Absent)(BboReplayExec.longField(_, childOutput))
+      val pqF = pqE.fold(BboReplayExec.Absent)(BboReplayExec.longField(_, childOutput))
       val snap = new Array[Long](4 * nL)
       val bboRow = UnsafeRow.createFromByteArray(
         UnsafeRow.calculateBitSetWidthInBytes(4 * nL) + 32 * nL, 4 * nL)
       var book: BookKernel = null
       var curKey: UnsafeRow = null
+      var restored = false
       def newBook(): Unit = {
         if (book != null) numRescans += book.rescans
         book = BookKernel(nL)
+        restored = false
         numBooks += 1
+      }
+      def restore(blob: Array[Byte]): Unit = {
+        // the key prints with external values (a date as a date, not a
+        // day count), as the Row it names in the user's data would
+        require(!restored, "resume: multiple checkpoint rows for group " +
+          (if (curKey == null) ""
+           else keyExprs.zipWithIndex.map { case (e, i) =>
+             CatalystTypeConverters.convertToScala(
+               curKey.get(i, e.dataType), e.dataType)
+           }.mkString(",")))
+        val b = BookCodec.deserialize(blob)
+        require(b.n == nL,
+          s"checkpoint was built at n=${b.n}; resume requested n=$nL " +
+            "(the stored state pins n — rebuild the checkpoint to change it)")
+        book = b
+        restored = true
+        numRestored += 1
       }
       Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
         if (book != null) { numRescans += book.rescans; book = null }
@@ -138,21 +171,16 @@ case class BboReplayExec(
           }
         } else if (book == null) newBook()
 
-        if (bidF.isNull(row)) OrderBookException.missingValue("is_bid")
-        if (priceF.isNull(row)) OrderBookException.missingValue("price")
-        if (qtyF.isNull(row)) OrderBookException.missingValue("qty")
-        val b = bidF.get(row)
-        val p = priceF.get(row)
-        val q = qtyF.get(row)
-        modeL match {
-          case 0 => Transitions.applyUpdate(book, b, p, q)
-          case 1 => Transitions.applyMutation(book, b, p, q)
-          case 2 =>
-            val hasPP = !ppF.get.isNull(row)
-            val hasPQ = !pqF.get.isNull(row)
-            Transitions.applyMutationWithModify(book, b, p, q,
-              hasPP, if (hasPP) ppF.get.get(row) else 0L,
-              hasPQ, if (hasPQ) pqF.get.get(row) else 0L)
+        if (stateIdx >= 0 && !row.isNullAt(stateIdx)) restore(row.getBinary(stateIdx))
+        else {
+          if (bidF.isNull(row)) OrderBookException.missingValue("is_bid")
+          if (priceF.isNull(row)) OrderBookException.missingValue("price")
+          if (qtyF.isNull(row)) OrderBookException.missingValue("qty")
+          val hasPP = !ppF.isNull(row)
+          val hasPQ = !pqF.isNull(row)
+          Transitions(modeL, book, bidF.get(row), priceF.get(row), qtyF.get(row),
+            hasPP, if (hasPP) ppF.get(row) else 0L,
+            hasPQ, if (hasPQ) pqF.get(row) else 0L)
         }
         BboReplayExec.fillBbo(bboRow, snap, book.snapshotLongs(snap), nL)
         numOutputRows += 1
@@ -200,6 +228,11 @@ object BboReplayExec {
   sealed abstract class LongField {
     def isNull(r: InternalRow): Boolean
     def get(r: InternalRow): Long
+  }
+  /** The reader of a column the mode does not have: always null. */
+  val Absent: LongField = new LongField {
+    def isNull(r: InternalRow) = true
+    def get(r: InternalRow) = 0L
   }
   sealed abstract class BoolField {
     def isNull(r: InternalRow): Boolean
@@ -288,8 +321,8 @@ object BboReplayExec {
   * `GraftExtensions` for spark.sql.extensions-based setups). */
 object BboReplayStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case BboReplayNode(mode, n, p, q, b, pp, pq, keys, ord, attrs, child) =>
-      BboReplayExec(mode, n, p, q, b, pp, pq, keys, ord, attrs,
+    case BboReplayNode(mode, n, p, q, b, pp, pq, st, keys, ord, attrs, child) =>
+      BboReplayExec(mode, n, p, q, b, pp, pq, st, keys, ord, attrs,
         planLater(child)) :: Nil
     case _ => Nil
   }

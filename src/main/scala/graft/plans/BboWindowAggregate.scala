@@ -33,7 +33,7 @@ case class BboWindowAggregate(
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[OrderBook] {
 
-  require(n >= 1 && n <= 20, s"Unsupported number of levels: $n")
+  OrderBookOps.requireLevels(n)
   require((mode == 2 && children.size == 5) || (mode != 2 && children.size == 3),
     "updates/mutations take (price, qty, is_bid); modify takes " +
       "(price, qty, is_bid, prev_price, prev_qty)")
@@ -53,19 +53,12 @@ case class BboWindowAggregate(
     if (bv == null) OrderBookException.missingValue("is_bid")
     if (pv == null) OrderBookException.missingValue("price")
     if (qv == null) OrderBookException.missingValue("qty")
-    val p = pv.asInstanceOf[Long]
-    val q = qv.asInstanceOf[Long]
-    val b = bv.asInstanceOf[Boolean]
-    mode match {
-      case 0 => Transitions.applyUpdate(book, b, p, q)
-      case 1 => Transitions.applyMutation(book, b, p, q)
-      case 2 =>
-        val ppv = children(3).eval(input)
-        val pqv = children(4).eval(input)
-        Transitions.applyMutationWithModify(book, b, p, q,
-          ppv != null, if (ppv != null) ppv.asInstanceOf[Long] else 0L,
-          pqv != null, if (pqv != null) pqv.asInstanceOf[Long] else 0L)
-    }
+    val ppv = if (mode == 2) children(3).eval(input) else null
+    val pqv = if (mode == 2) children(4).eval(input) else null
+    Transitions(mode, book, bv.asInstanceOf[Boolean], pv.asInstanceOf[Long],
+      qv.asInstanceOf[Long],
+      ppv != null, if (ppv != null) ppv.asInstanceOf[Long] else 0L,
+      pqv != null, if (pqv != null) pqv.asInstanceOf[Long] else 0L)
     book
   }
 

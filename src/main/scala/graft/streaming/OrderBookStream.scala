@@ -21,9 +21,10 @@ import org.apache.spark.sql.types._
   */
 object OrderBookStream {
 
-  /** Typed micro-batch event for the modify variant. `et` is the
-    * event-time when event-time eviction is configured, null otherwise. */
-  case class ModifyEvent(pkey: Long, okey: Long, price: Long, qty: Long,
+  /** Typed micro-batch event of the stream replays (`pp`/`pq` are None
+    * outside O3). `et` is the event-time when event-time eviction is
+    * configured, null otherwise. */
+  case class StreamEvent(pkey: Long, okey: Long, price: Long, qty: Long,
                          isBid: Boolean, pp: Option[Long], pq: Option[Long],
                          et: java.sql.Timestamp = null)
 
@@ -147,16 +148,16 @@ object OrderBookStream {
       partitionBy: String, orderBy: String,
       idleTimeout: Option[String] = None,
       eventTimeCol: Option[String] = None): DataFrame =
-    replayStream(df, price, qty, isBid, n, partitionBy, orderBy,
-      mutation = false, idleTimeout, eventTimeCol)
+    replayStream(df, 0, price, qty, isBid, None, n, partitionBy, orderBy,
+      idleTimeout, eventTimeCol)
 
   def topNLevelsFromPriceMutations(
       df: DataFrame, price: String, qty: String, isBid: String, n: Int,
       partitionBy: String, orderBy: String,
       idleTimeout: Option[String] = None,
       eventTimeCol: Option[String] = None): DataFrame =
-    replayStream(df, price, qty, isBid, n, partitionBy, orderBy,
-      mutation = true, idleTimeout, eventTimeCol)
+    replayStream(df, 1, price, qty, isBid, None, n, partitionBy, orderBy,
+      idleTimeout, eventTimeCol)
 
   /** Streaming O3: mutations with modify (nullable prev columns).
     * `idleTimeout` evicts idle products' book state like the O1/O2
@@ -166,70 +167,9 @@ object OrderBookStream {
       prevPrice: String, prevQty: String, n: Int,
       partitionBy: String, orderBy: String,
       idleTimeout: Option[String] = None,
-      eventTimeCol: Option[String] = None): DataFrame = {
-
-    val outSchema = StructType(
-      StructField(partitionBy, LongType) +:
-        StructField(orderBy, LongType) +:
-        OrderBookOps.bboFieldNames(n).map(StructField(_, LongType, nullable = true)))
-
-    def requireIntegral(c: String): Unit = {
-      val t = df.schema(c).dataType
-      require(t == LongType || t == IntegerType ||
-        t == org.apache.spark.sql.types.ShortType ||
-        t == org.apache.spark.sql.types.ByteType,
-        s"column '$c' must be an integral type for the streaming replay " +
-          s"(got ${t.catalogString})")
-    }
-    requireIntegral(partitionBy)
-    requireIntegral(orderBy)
-
-    val work = df.select(
-      col(partitionBy).cast("long").as("pkey"),
-      col(orderBy).cast("long").as("okey"),
-      col(price).cast("long").as("price"),
-      col(qty).cast("long").as("qty"),
-      col(isBid).cast("boolean").as("isBid"),
-      col(prevPrice).cast("long").as("pp"),
-      col(prevQty).cast("long").as("pq"),
-      etimeExpr(eventTimeCol))
-
-    val rowEnc: Encoder[Row] = Encoders.row(outSchema)
-    implicit val evEnc: Encoder[ModifyEvent] = Encoders.product[ModifyEvent]
-
-    val eventMode = eventTimeCol.isDefined
-    work.as[ModifyEvent]
-      .groupByKey(_.pkey)(Encoders.scalaLong)
-      .flatMapGroupsWithState[Array[Byte], Row](
-        OutputMode.Append(), timeoutConf(idleTimeout, eventTimeCol)) {
-        (key: Long, rows: Iterator[ModifyEvent], state: GroupState[Array[Byte]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val (blob0, prevMaxEv) =
-              if (state.exists) unpackBookState(state.get)
-              else (null, Long.MinValue)
-            val book =
-              if (blob0 != null) BookCodec.deserialize(blob0) else new OrderBook(n)
-            val sorted = rows.toArray.sortBy(_.okey)
-            val out = sorted.iterator.map { e =>
-              Transitions.applyMutationWithModify(book, e.isBid, e.price, e.qty,
-                e.pp.isDefined, e.pp.getOrElse(0L), e.pq.isDefined, e.pq.getOrElse(0L))
-              val vals = new Array[Any](2 + 4 * n)
-              vals(0) = key
-              vals(1) = e.okey
-              book.snapshotInto(vals, 2)
-              new GenericRowWithSchema(vals, outSchema): Row
-            }.toArray
-            val maxEv = math.max(prevMaxEv,
-              maxEventMs(sorted.iterator.map(_.et)))
-            state.update(packBookState(BookCodec.serialize(book), maxEv))
-            armIdleTimeout(state, idleTimeout, eventMode, maxEv)
-            out.iterator
-          }
-      }(Encoders.BINARY, rowEnc)
-  }
+      eventTimeCol: Option[String] = None): DataFrame =
+    replayStream(df, 2, price, qty, isBid, Some((prevPrice, prevQty)), n,
+      partitionBy, orderBy, idleTimeout, eventTimeCol)
 
   /** Typed state for the analytics replay: the book blob plus the
     * previous event's top-of-book (None ≡ "no previous two-sided
@@ -522,12 +462,14 @@ object OrderBookStream {
       }(stEnc, rowEnc)
   }
 
+  /** The three stream replays: `mode` 0 O1, 1 O2, 2 O3 (`prev` names
+    * O3's prev price and qty columns). */
   private def replayStream(
-      df: DataFrame, price: String, qty: String, isBid: String, n: Int,
-      partitionBy: String, orderBy: String, mutation: Boolean,
-      idleTimeout: Option[String] = None,
-      eventTimeCol: Option[String] = None): DataFrame = {
-
+      df: DataFrame, mode: Int, price: String, qty: String, isBid: String,
+      prev: Option[(String, String)], n: Int,
+      partitionBy: String, orderBy: String,
+      idleTimeout: Option[String], eventTimeCol: Option[String]): DataFrame = {
+    OrderBookOps.requireLevels(n)
     val outSchema = StructType(
       StructField(partitionBy, LongType) +:
         StructField(orderBy, LongType) +:
@@ -549,21 +491,20 @@ object OrderBookStream {
       col(orderBy).cast("long").as("okey"),
       col(price).cast("long").as("price"),
       col(qty).cast("long").as("qty"),
-      col(isBid).cast("boolean").as("is_bid"),
+      col(isBid).cast("boolean").as("isBid"),
+      prev.fold(lit(null))(p => col(p._1)).cast("long").as("pp"),
+      prev.fold(lit(null))(p => col(p._2)).cast("long").as("pq"),
       etimeExpr(eventTimeCol))
 
-    implicit val rowEnc: Encoder[Row] = Encoders.row(outSchema)
-    implicit val longEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val tupEnc: Encoder[(Long, Long, Long, Long, Boolean, java.sql.Timestamp)] =
-      Encoders.product[(Long, Long, Long, Long, Boolean, java.sql.Timestamp)]
+    val rowEnc: Encoder[Row] = Encoders.row(outSchema)
+    implicit val evEnc: Encoder[StreamEvent] = Encoders.product[StreamEvent]
 
     val eventMode = eventTimeCol.isDefined
-    work.as[(Long, Long, Long, Long, Boolean, java.sql.Timestamp)]
-      .groupByKey(_._1)
+    work.as[StreamEvent]
+      .groupByKey(_.pkey)(Encoders.scalaLong)
       .flatMapGroupsWithState[Array[Byte], Row](
         OutputMode.Append(), timeoutConf(idleTimeout, eventTimeCol)) {
-        (key: Long, rows: Iterator[(Long, Long, Long, Long, Boolean, java.sql.Timestamp)],
-         state: GroupState[Array[Byte]]) =>
+        (key: Long, rows: Iterator[StreamEvent], state: GroupState[Array[Byte]]) =>
           if (state.hasTimedOut) {
             // idle product: drop the book; a later re-appearance replays
             // from a fresh (empty) book
@@ -576,18 +517,18 @@ object OrderBookStream {
             val book =
               if (blob0 != null) BookCodec.deserialize(blob0) else new OrderBook(n)
             // fold in order within this micro-batch
-            val sorted = rows.toArray.sortBy(_._2)
-            val out = sorted.iterator.map { case (_, okey, p, q, b, _) =>
-              if (mutation) Transitions.applyMutation(book, b, p, q)
-              else Transitions.applyUpdate(book, b, p, q)
+            val sorted = rows.toArray.sortBy(_.okey)
+            val out = sorted.iterator.map { e =>
+              Transitions(mode, book, e.isBid, e.price, e.qty,
+                e.pp.isDefined, e.pp.getOrElse(0L), e.pq.isDefined, e.pq.getOrElse(0L))
               val vals = new Array[Any](2 + 4 * n)
               vals(0) = key
-              vals(1) = okey
+              vals(1) = e.okey
               book.snapshotInto(vals, 2)
               new GenericRowWithSchema(vals, outSchema): Row
             }.toArray
             val maxEv = math.max(prevMaxEv,
-              maxEventMs(sorted.iterator.map(_._6)))
+              maxEventMs(sorted.iterator.map(_.et)))
             state.update(packBookState(BookCodec.serialize(book), maxEv))
             armIdleTimeout(state, idleTimeout, eventMode, maxEv)
             out.iterator

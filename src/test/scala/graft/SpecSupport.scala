@@ -1,10 +1,27 @@
 package graft
 
-/** Helpers shared across artifact-lifecycle specs — one copy, because
-  * both are the kind that rot when duplicated: the err capture swaps
-  * JVM-global state, and the epoch lister encodes the `e<digits>`
-  * layout contract. */
+/** Helpers shared across specs — one copy, because each is the kind
+  * that rots when duplicated: the err capture swaps JVM-global state,
+  * the epoch lister encodes the `e<digits>` layout contract, and the
+  * replay-exec finder walks AQE's plan wrappers. */
 object SpecSupport {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+  import graft.plans.BboReplayExec
+
+  /** The BboReplayExec in `df`'s executed plan (after an action, its
+    * metrics hold that run's counts). */
+  def replayExec(df: DataFrame): BboReplayExec = {
+    def find(p: SparkPlan): Option[BboReplayExec] = p match {
+      case e: BboReplayExec => Some(e)
+      case a: AdaptiveSparkPlanExec => find(a.executedPlan)
+      case q: QueryStageExec => find(q.plan)
+      case other => other.children.iterator.map(find).collectFirst { case Some(e) => e }
+    }
+    find(df.queryExecution.executedPlan).getOrElse(
+      throw new AssertionError(s"no BboReplayExec in\n${df.queryExecution.executedPlan}"))
+  }
 
   /** Run `f` with System.err captured, returning (result, captured
     * text) — the WARN-assertion helper. The swap is JVM-GLOBAL and

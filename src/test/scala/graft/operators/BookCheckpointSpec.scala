@@ -117,6 +117,21 @@ class BookCheckpointSpec extends AnyFunSuite {
       == rows(reference.orderBy("seq")))
   }
 
+  test("the replay exec counts one restored book per checkpoint row") {
+    val full = stream(120)
+    // K = 2 state rows (products 0 and 1) for N = 3 products with events
+    val state = BookCheckpoint.bookStateSnapshots(
+      full.filter(col("seq") < 60 && col("product") =!= 2),
+      "price", "qty", "is_bid", 2, Seq("product"), Seq("seq"))
+    val resumed = BookCheckpoint.resumeTopNLevelsFromPriceUpdates(
+      full.filter(col("seq") >= 60), state,
+      "price", "qty", "is_bid", 2, Seq("product"), Seq("seq"))
+    assert(resumed.collect().length == 60)
+    val exec = graft.SpecSupport.replayExec(resumed)
+    assert(exec.metrics("numRestored").value == 2)
+    assert(exec.metrics("numBooks").value == 3)
+  }
+
   test("the stored state pins n: resuming at a different n fails loudly") {
     val full = stream(60)
     val state = BookCheckpoint.bookStateSnapshots(
@@ -207,6 +222,48 @@ class BookCheckpointSpec extends AnyFunSuite {
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
     assert(msgs(e).exists(m => m != null && m.contains("multiple checkpoint rows")))
+  }
+
+  test("resume rejects an empty orderBy at query build time, in every mode") {
+    val full = stream(60)
+      .withColumn("pp", lit(null).cast("long"))
+      .withColumn("pq", lit(null).cast("long"))
+    val state = BookCheckpoint.bookStateSnapshots(
+      full.filter(col("seq") < 30),
+      "price", "qty", "is_bid", 1, Seq("product"), Seq("seq"))
+    val day2 = full.filter(col("seq") >= 30)
+    val calls: Seq[() => DataFrame] = Seq(
+      () => BookCheckpoint.resumeTopNLevelsFromPriceUpdates(day2, state,
+        "price", "qty", "is_bid", 1, Seq("product"), Seq()),
+      () => BookCheckpoint.resumeTopNLevelsFromPriceMutations(day2, state,
+        "price", "qty", "is_bid", 1, Seq("product"), Seq()),
+      () => BookCheckpoint.resumeTopNLevelsFromPriceMutationsWithModify(
+        day2, state, "price", "qty", "is_bid", "pp", "pq", 1,
+        Seq("product"), Seq()))
+    calls.foreach { call =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(
+        "orderBy must be non-empty: book replay is order-sensitive"))
+    }
+  }
+
+  test("a duplicate checkpoint row names its group with external values") {
+    val full = stream(60)
+      .withColumn("day", date_add(lit(java.sql.Date.valueOf("2024-03-01")),
+        col("product").cast("int")))
+    val state = BookCheckpoint.bookStateSnapshots(
+      full.filter(col("seq") < 30),
+      "price", "qty", "is_bid", 1, Seq("day"), Seq("seq"))
+    val e = intercept[Exception] {
+      BookCheckpoint.resumeTopNLevelsFromPriceUpdates(
+        full.filter(col("seq") >= 30), state.union(state),
+        "price", "qty", "is_bid", 1, Seq("day"), Seq("seq")).collect()
+    }
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
+    assert(msgs(e).exists(m => m != null &&
+      m.matches("(?s).*multiple checkpoint rows for group 2024-03-0[123].*")),
+      msgs(e).mkString(" | "))
   }
 
   test("a non-default stateCol chains day over day (output column is " +

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** API-contract parity with the reference:
   * - n outside 1..=20 is rejected with the reference's exact message
-  *   (calculate_bbo.rs:117-127 "Unsupported number of levels");
+  *   (calculate_bbo.rs:117-127 "Unsupported number of levels"), by the
+  *   batch and the streaming replays alike;
   * - the SQL-registered bbo_* functions cast their event children, so
   *   INT-typed columns resolve cleanly instead of failing at execution;
   * - parallel replay requires an integral order column (cast(long) on a
@@ -21,12 +22,24 @@ class ContractSpec extends AnyFunSuite {
     .toDF("seq", "product", "is_bid", "price", "qty")
 
   test("n outside 1..=20 is rejected with the reference message") {
-    for (bad <- Seq(0, -1, 21, 100)) {
-      val e = intercept[IllegalArgumentException] {
-        OrderBookOps.topNLevelsFromPriceUpdates(
-          stream, "price", "qty", "is_bid", bad, Seq("product"), Seq("seq"))
-      }
-      assert(e.getMessage.contains(s"Unsupported number of levels: $bad"))
+    import graft.streaming.OrderBookStream
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val live = MemoryStream[(Long, Long, Boolean, Long, Long, Option[Long], Option[Long])]
+      .toDF().toDF("seq", "product", "is_bid", "price", "qty", "prev_price", "prev_qty")
+    // the batch API and the three stream entry points, each at query build
+    val entryPoints: Seq[(String, Int => Any)] = Seq(
+      "batch" -> (n => OrderBookOps.topNLevelsFromPriceUpdates(
+        stream, "price", "qty", "is_bid", n, Seq("product"), Seq("seq"))),
+      "stream updates" -> (n => OrderBookStream.topNLevelsFromPriceUpdates(
+        live, "price", "qty", "is_bid", n, "product", "seq")),
+      "stream mutations" -> (n => OrderBookStream.topNLevelsFromPriceMutations(
+        live, "price", "qty", "is_bid", n, "product", "seq")),
+      "stream modify" -> (n => OrderBookStream.topNLevelsFromPriceMutationsWithModify(
+        live, "price", "qty", "is_bid", "prev_price", "prev_qty", n, "product", "seq")))
+    for ((name, build) <- entryPoints; bad <- Seq(0, -1, 21, 100)) {
+      val e = intercept[IllegalArgumentException](build(bad))
+      assert(e.getMessage.contains(s"Unsupported number of levels: $bad"), name)
     }
     // boundary values are accepted
     for (ok <- Seq(1, 20)) {

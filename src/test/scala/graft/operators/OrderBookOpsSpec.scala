@@ -200,16 +200,14 @@ class OrderBookOpsSpec extends AnyFunSuite {
     import graft.queries.EventStreams
     for (mutation <- Seq(false, true)) {
       val stream = EventStreams.bookStream(spark, "/root/testdata/sf0.001", qtyZeroEvery5 = !mutation)
-      def run(f: (org.apache.spark.sql.DataFrame, String, String, String, Int, Seq[String], Seq[String]) => org.apache.spark.sql.DataFrame) =
-        f(stream, "price", "qty", "is_bid", 3, Seq("product"), Seq("seq"))
-          .orderBy("product", "seq").collect().toSeq
-      val (a, b) =
-        if (mutation)
-          (run(OrderBookOps.topNLevelsFromPriceMutations),
-            run(OrderBookOps.topNLevelsFromPriceMutationsViaGroups))
-        else
-          (run(OrderBookOps.topNLevelsFromPriceUpdates),
-            run(OrderBookOps.topNLevelsFromPriceUpdatesViaGroups))
+      val out =
+        if (mutation) OrderBookOps.topNLevelsFromPriceMutations(
+          stream, "price", "qty", "is_bid", 3, Seq("product"), Seq("seq"))
+        else OrderBookOps.topNLevelsFromPriceUpdates(
+          stream, "price", "qty", "is_bid", 3, Seq("product"), Seq("seq"))
+      val a = out.orderBy("product", "seq").collect().toSeq
+      val b = graft.CoreFoldOracle.replay(stream, if (mutation) 1 else 0, 3,
+        "price", "qty", "is_bid", None, Seq("product"), Seq("seq"))
       assert(a.size == 1000 && a == b, s"mutation=$mutation")
     }
   }

@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The reference's repetition-scaled goldens
   * (test_calculate_bbo.py:12-127: the 12-event fill-and-fully-drain
   * pattern at input repetition {10, 100, 1000} × n ∈ {1, 2, 4}), run
-  * against EVERY batch engine form — custom physical operator,
-  * flatMapSortedGroups oracle, window aggregate, parallel-prefix replay.
+  * against EVERY batch engine form — custom physical operator, window
+  * aggregate, parallel-prefix replay.
   * The pattern drains the book each cycle, so the expected top-1 values
   * repeat with period 12 and one id→expected map checks any repetition. */
 class RepetitionGoldensSpec extends AnyFunSuite {
@@ -56,7 +56,7 @@ class RepetitionGoldensSpec extends AnyFunSuite {
     }
   }
 
-  private val forms = Seq("exec", "groups", "window", "parallel")
+  private val forms = Seq("exec", "window", "parallel")
 
   private def run(form: String, df: DataFrame, n: Int,
                   mutation: Boolean): DataFrame = form match {
@@ -66,13 +66,6 @@ class RepetitionGoldensSpec extends AnyFunSuite {
           df, "price", "qty", "is_bid", n, Seq("product"), Seq("seq"))
       else
         OrderBookOps.topNLevelsFromPriceUpdates(
-          df, "price", "qty", "is_bid", n, Seq("product"), Seq("seq"))
-    case "groups" =>
-      if (mutation)
-        OrderBookOps.topNLevelsFromPriceMutationsViaGroups(
-          df, "price", "qty", "is_bid", n, Seq("product"), Seq("seq"))
-      else
-        OrderBookOps.topNLevelsFromPriceUpdatesViaGroups(
           df, "price", "qty", "is_bid", n, Seq("product"), Seq("seq"))
     case "window" =>
       val bbo =
@@ -135,10 +128,6 @@ class RepetitionGoldensSpec extends AnyFunSuite {
     form match {
       case "exec" =>
         OrderBookOps.topNLevelsFromPriceMutationsWithModify(
-          df, "price", "qty", "is_bid", "prev_price", "prev_qty", n,
-          Seq("product"), Seq("seq"))
-      case "groups" =>
-        OrderBookOps.topNLevelsFromPriceMutationsWithModifyViaGroups(
           df, "price", "qty", "is_bid", "prev_price", "prev_qty", n,
           Seq("product"), Seq("seq"))
       case "window" =>

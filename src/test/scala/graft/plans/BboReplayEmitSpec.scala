@@ -1,20 +1,22 @@
 package graft.plans
 
-import graft.SparkTestSession
+import graft.{CoreFoldOracle, SparkTestSession, SpecSupport}
 import graft.core.{BookKernel, Transitions}
 import graft.operators.OrderBookOps
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable
 
 /** BboReplayExec's row emitter (a reused 4·n-field UnsafeRow joined onto
-  * the input UnsafeRow) against the Row-based flatMapSortedGroups oracle,
-  * value for value, in all three modes: variable-length passthrough
-  * columns with nulls, n = 1 (the scalar kernel) and n = 20 over books
-  * shallower than n, several books per partition. */
+  * the input UnsafeRow) against the `graft.core` fold oracle
+  * ([[graft.CoreFoldOracle]]), value for value, in all three modes:
+  * variable-length passthrough columns with nulls, n = 1 (the scalar
+  * kernel) and n = 20 over books shallower than n, several books per
+  * partition. The test names keep their original "ViaGroups oracle"
+  * wording; that Row-based fold was deleted and the core fold took its
+  * place. */
 class BboReplayEmitSpec extends AnyFunSuite {
   import BboReplayEmitSpec.Ev
   lazy val spark = SparkTestSession.spark
@@ -60,40 +62,26 @@ class BboReplayEmitSpec extends AnyFunSuite {
     }
   }
 
-  private def replay(mode: Int, df: DataFrame, n: Int, viaGroups: Boolean): DataFrame = {
-    val keys = Seq("product"); val order = Seq("seq")
-    (mode, viaGroups) match {
-      case (0, false) => OrderBookOps.topNLevelsFromPriceUpdates(df, "price", "qty", "is_bid", n, keys, order)
-      case (0, true) => OrderBookOps.topNLevelsFromPriceUpdatesViaGroups(df, "price", "qty", "is_bid", n, keys, order)
-      case (1, false) => OrderBookOps.topNLevelsFromPriceMutations(df, "price", "qty", "is_bid", n, keys, order)
-      case (1, true) => OrderBookOps.topNLevelsFromPriceMutationsViaGroups(df, "price", "qty", "is_bid", n, keys, order)
-      case (_, false) => OrderBookOps.topNLevelsFromPriceMutationsWithModify(
-        df, "price", "qty", "is_bid", "prev_price", "prev_qty", n, keys, order)
-      case (_, true) => OrderBookOps.topNLevelsFromPriceMutationsWithModifyViaGroups(
-        df, "price", "qty", "is_bid", "prev_price", "prev_qty", n, keys, order)
-    }
-  }
+  private val keys = Seq("product"); private val order = Seq("seq")
+  private val prev = Some(("prev_price", "prev_qty"))
 
-  private def replayExec(df: DataFrame): BboReplayExec = {
-    def find(p: SparkPlan): Option[BboReplayExec] = p match {
-      case e: BboReplayExec => Some(e)
-      case a: AdaptiveSparkPlanExec => find(a.executedPlan)
-      case q: QueryStageExec => find(q.plan)
-      case other => other.children.iterator.map(find).collectFirst { case Some(e) => e }
-    }
-    find(df.queryExecution.executedPlan).getOrElse(
-      fail(s"no BboReplayExec in\n${df.queryExecution.executedPlan}"))
+  private def replay(mode: Int, df: DataFrame, n: Int): DataFrame = mode match {
+    case 0 => OrderBookOps.topNLevelsFromPriceUpdates(df, "price", "qty", "is_bid", n, keys, order)
+    case 1 => OrderBookOps.topNLevelsFromPriceMutations(df, "price", "qty", "is_bid", n, keys, order)
+    case _ => OrderBookOps.topNLevelsFromPriceMutationsWithModify(
+      df, "price", "qty", "is_bid", "prev_price", "prev_qty", n, keys, order)
   }
 
   for (mode <- Seq(0, 1, 2); n <- Seq(1, 20)) {
     test(s"exec rows == ViaGroups oracle rows, mode=$mode n=$n, string passthrough with nulls") {
       val df = events(mode, products = 12, perBook = 60, seed = 31L * mode + n).toDF()
-      val got = replay(mode, df, n, viaGroups = false)
-      val exp = replay(mode, df, n, viaGroups = true)
-      assert(got.schema == exp.schema)
+      val got = replay(mode, df, n)
+      assert(got.schema == StructType(df.schema.fields ++
+        OrderBookOps.bboFieldNames(n).map(StructField(_, LongType, nullable = true))))
       val a = got.orderBy("product", "seq").collect().toSeq
-      val b = exp.orderBy("product", "seq").collect().toSeq
-      assert(a.size == 12 * 60)
+      val b = CoreFoldOracle.replay(df, mode, n, "price", "qty", "is_bid",
+        if (mode == 2) prev else None, keys, order)
+      assert(a.size == 12 * 60 && b.size == a.size)
       a.zip(b).foreach { case (x, y) => assert(x == y) }
       // the null padding past a side's depth is exercised
       if (n == 20) assert(a.forall(_.isNullAt(a.head.fieldIndex("bid_price_7"))))
@@ -110,7 +98,7 @@ class BboReplayEmitSpec extends AnyFunSuite {
   test("number of top-N rescans == the kernels' rescans summed over every book") {
     for (n <- Seq(1, 3)) {
       val evs = events(0, products = 9, perBook = 200, seed = 7L + n)
-      val out = replay(0, evs.toDF(), n, viaGroups = false)
+      val out = replay(0, evs.toDF(), n)
       assert(out.collect().length == evs.size)
       val expected = evs.groupBy(_.product).values.map { bookEvs =>
         val book = BookKernel(n)
@@ -118,7 +106,7 @@ class BboReplayEmitSpec extends AnyFunSuite {
         book.rescans
       }.sum
       assert(expected > 0)
-      assert(replayExec(out).metrics("numRescans").value == expected, s"n=$n")
+      assert(SpecSupport.replayExec(out).metrics("numRescans").value == expected, s"n=$n")
     }
   }
 }
