@@ -29,6 +29,15 @@ import org.apache.spark.sql.DataFrame
   * a lazy checkpoint would keep the doubled plan alive until the first
   * action anyway — the eagerness is the point, not an accident (the
   * round-10 advice note on `cosineNearDupPairsBanded`).
+  *
+  * The rule for a call site: sever a relation only when two or more
+  * consumers read it, or a loop iterates over it. Each call costs at
+  * least one job (two when the relation ends in an exchange under AQE),
+  * and a relation read once is cheaper left in its consumer's plan. The
+  * stored BM25 probe is the worked case: its termstats slice has one
+  * reader in the exact and capped modes (the df broadcast) and is not
+  * severed there, while the max-score mode reads the same slice three
+  * times (df, per-term and per-block bounds) and severs it.
   */
 object Checkpoints {
   /** Session conf key selecting the severing mode: "local" | "reliable". */

@@ -49,7 +49,7 @@ private[graft] object MetaIO {
     * fast, untouched. */
   def readMetaRow(spark: SparkSession, path: String, label: String,
                   kind: String): Row = {
-    def attempt(): Array[Row] = spark.read.parquet(s"$path/meta").collect()
+    def attempt(): Array[Row] = StoredParquet.read(spark, s"$path/meta").collect()
     val rows =
       try attempt()
       catch {
@@ -139,10 +139,7 @@ private[graft] object MetaIO {
 
   private def hasDataFile(fs: org.apache.hadoop.fs.FileSystem,
                           dir: org.apache.hadoop.fs.Path): Boolean =
-    fs.listStatus(dir).exists { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
+    fs.listStatus(dir).exists(StoredParquet.isDataFile)
 
   /** The SHARED batch-pointer replay/regression policy, one
     * implementation for every streaming ingest leg (WARC, media-hash,

@@ -1038,16 +1038,17 @@ object RetrievalOps {
 
   private def readStoredPostings(spark: SparkSession, path: String,
                                  meta: RetrievalIndexMeta): DataFrame =
-    spark.read.parquet(
+    StoredParquet.read(spark,
       (meta.base to meta.epoch).map(postingsDir(path, _)): _*)
 
   private def readStoredDocs(spark: SparkSession, path: String,
                              meta: RetrievalIndexMeta): DataFrame =
-    spark.read.parquet((meta.base to meta.epoch).map(docsDir(path, _)): _*)
+    StoredParquet.read(spark,
+      (meta.base to meta.epoch).map(docsDir(path, _)): _*)
 
   private def readStoredPositions(spark: SparkSession, path: String,
                                   meta: RetrievalIndexMeta): DataFrame =
-    spark.read.parquet(
+    StoredParquet.read(spark,
       (meta.base to meta.epoch).map(positionsDir(path, _)): _*)
 
   /** Per-epoch TERM STATS (token, df, max_tf, min_dl) derived from a
@@ -1069,14 +1070,18 @@ object RetrievalOps {
       .write.mode("overwrite").parquet(dir)
 
   /** The term-stats window merged: (token, df, max_tf, min_dl) with
-    * the per-epoch rows folded by their merge ops. */
+    * the per-epoch rows folded by their merge ops. One epoch already
+    * holds one row per token, so a one-epoch window skips the fold (and
+    * its exchange). */
   private def readStoredTermstats(spark: SparkSession, path: String,
-                                  meta: RetrievalIndexMeta): DataFrame =
-    spark.read.parquet(
-        (meta.base to meta.epoch).map(termstatsDir(path, _)): _*)
-      .groupBy(col("token"))
+                                  meta: RetrievalIndexMeta): DataFrame = {
+    val ts = StoredParquet.read(spark,
+      (meta.base to meta.epoch).map(termstatsDir(path, _)): _*)
+    if (meta.base == meta.epoch) ts
+    else ts.groupBy(col("token"))
       .agg(sum(col("df")).as("df"), max(col("max_tf")).as("max_tf"),
         min(col("min_dl")).as("min_dl"))
+  }
 
   /** Per-epoch BLOCK STATS (token, blk, max_tf, min_dl) — the
     * block-max relation of Ding & Suel ("Faster top-k document
@@ -1098,7 +1103,7 @@ object RetrievalOps {
   /** The block-stats window merged: (token, blk, max_tf, min_dl). */
   private def readStoredBlockstats(spark: SparkSession, path: String,
                                    meta: RetrievalIndexMeta): DataFrame =
-    spark.read.parquet(
+    StoredParquet.read(spark,
         (meta.base to meta.epoch).map(blockstatsDir(path, _)): _*)
       .groupBy(col("token"), col("blk"))
       .agg(max(col("max_tf")).as("max_tf"), min(col("min_dl")).as("min_dl"))
@@ -1120,7 +1125,7 @@ object RetrievalOps {
       positionalPostings(df, textCol, idCol)
         .sortWithinPartitions(col("token"))
         .write.mode("overwrite").parquet(positionsDir(path, epoch))
-      val pos = spark.read.parquet(positionsDir(path, epoch))
+      val pos = StoredParquet.read(spark, positionsDir(path, epoch))
       val post = pos.groupBy(col("token"), col("doc_id"))
         .agg(count(lit(1)).as("tf"))
       val dl = post.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
@@ -1133,7 +1138,7 @@ object RetrievalOps {
         .sortWithinPartitions(col("token"))
         .write.mode("overwrite").parquet(postingsDir(path, epoch))
     }
-    val stored = spark.read.parquet(postingsDir(path, epoch))
+    val stored = StoredParquet.read(spark, postingsDir(path, epoch))
     if (withTermstats)
       writeTermstats(spark, stored, termstatsDir(path, epoch))
     if (blockCount > 0L)
@@ -1175,7 +1180,7 @@ object RetrievalOps {
     val (n, t) = writeEpoch(df, textCol, idCol, path, 0L, withPositions,
       withTermstats = true, blockCount = 0L)
     val bc = blockCountFor(n)
-    writeBlockstats(df.sparkSession.read.parquet(postingsDir(path, 0L)),
+    writeBlockstats(StoredParquet.read(df.sparkSession, postingsDir(path, 0L)),
       blockstatsDir(path, 0L), bc)
     swapRetrievalMeta(df.sparkSession, path,
       RetrievalIndexMeta(epoch = 0L, base = 0L, nDocs = n, totalTokens = t,
@@ -1270,7 +1275,7 @@ object RetrievalOps {
     if (meta.hasTermstats)
       // recompute from the compacted postings (self-healing, and the
       // compaction scans them anyway) rather than folding the window
-      writeTermstats(spark, spark.read.parquet(postingsDir(path, next)),
+      writeTermstats(spark, StoredParquet.read(spark, postingsDir(path, next)),
         termstatsDir(path, next))
     // compaction is the one safe point to RE-PICK the block modulus
     // (it rewrites every block-stats row anyway, and between
@@ -1279,7 +1284,7 @@ object RetrievalOps {
     // per-block granularity back here
     val bc = if (meta.blockCount > 0L) blockCountFor(meta.nDocs) else 0L
     if (bc > 0L)
-      writeBlockstats(spark.read.parquet(postingsDir(path, next)),
+      writeBlockstats(StoredParquet.read(spark, postingsDir(path, next)),
         blockstatsDir(path, next), bc)
     swapRetrievalMeta(spark, path,
       meta.copy(epoch = next, base = next, blockCount = bc))
@@ -1325,7 +1330,7 @@ object RetrievalOps {
     if (!needTs && !needBs) return false
     val bc = if (needBs) blockCountFor(meta.nDocs) else meta.blockCount
     (meta.base to meta.epoch).foreach { e =>
-      val post = spark.read.parquet(postingsDir(path, e))
+      val post = StoredParquet.read(spark, postingsDir(path, e))
       if (needTs) writeTermstats(spark, post, termstatsDir(path, e))
       if (needBs) writeBlockstats(post, blockstatsDir(path, e), bc)
     }
@@ -1353,7 +1358,25 @@ object RetrievalOps {
     * probed term's df exceeds the cap. The truncation costs one extra
     * row-group-pruned pass over the probed postings (the true-df
     * count), which the cap repays as soon as one term's df exceeds
-    * it. */
+    * it.
+    *
+    * Jobs of one exact probe on a termstats artifact (10; pinned by
+    * `RetrievalOpsSpec`). Every stored relation is read with its schema
+    * from the parquet footer ([[StoredParquet]]), so no schema-inference
+    * job runs. Before the DataFrame returns:
+    *  1. the meta row's collect;
+    *  2. the query-term sever (two readers: the term collect and the
+    *     scoring join);
+    *  3. the distinct-term collect ([[probeTerms]], no exchange).
+    * Under AQE, at the caller's action:
+    *  4. to 6. three broadcasts: the query terms, the termstats df slice
+    *     (read in place: one reader, so not severed) and the one-row
+    *     corpus stats;
+    *  7. the spread of the term-filtered postings;
+    *  8. the per-(query, doc) score rollup;
+    *  9. the per-query top-K;
+    *  10. the result stage.
+    * A window of several epochs adds the termstats merge's exchange. */
   def bm25AgainstStoredIndex(spark: SparkSession, path: String,
                              queries: DataFrame, queryIdCol: String,
                              queryTextCol: String, k: Int,
@@ -1370,23 +1393,22 @@ object RetrievalOps {
       .toDF("n_docs", "total_tokens", "avgdl_milli")
     val qt = Checkpoints.sever(
       queryTerms(queries, queryIdCol, queryTextCol))
-    val terms = qt.select(col("token")).distinct()
-      .as[String].collect().sorted
-    require(terms.length <= maxTerms,
-      s"bm25AgainstStoredIndex: query workload has ${terms.length} " +
-        s"distinct terms, past the $maxTerms literal-filter guard — " +
-        "shard the workload across probes")
+    val terms = probeTerms(qt, maxTerms, "bm25AgainstStoredIndex")
     val cand0 = readStoredPostings(spark, path, meta)
       .filter(col("token").isin(terms.toSeq: _*))
     val cand = spread(cand0)
     // a termstats artifact answers "true df of these terms" (and the
     // max-score upper bounds) from the vocabulary-sized relation —
     // no df pass over the postings in ANY serving mode. Pre-termstats
-    // indexes fall back to deriving both from cand.
-    val ts = if (meta.hasTermstats)
-      Some(Checkpoints.sever(readStoredTermstats(spark, path, meta)
-        .filter(col("token").isin(terms.toSeq: _*))))
-    else None
+    // indexes fall back to deriving both from cand. Only the max-score
+    // mode reads it more than once (df, per-term and per-block bounds),
+    // so only that mode severs it; the exact and capped modes read it
+    // once, inside their df broadcast.
+    val ts = if (meta.hasTermstats) {
+      val t = readStoredTermstats(spark, path, meta)
+        .filter(col("token").isin(terms.toSeq: _*))
+      Some(if (maxScoreSplit.isDefined) Checkpoints.sever(t) else t)
+    } else None
     val dfStore = ts.map(_.select(col("token"), col("df").as("__df")))
     // admissible upper-bound columns over a termstats/blockstats row
     // (df, max_tf, min_dl with the corpus stats in scope): tf_micro is
@@ -1470,12 +1492,7 @@ object RetrievalOps {
     val pt = Checkpoints.sever(
       phraseTerms(queries, queryIdCol, queryTextCol))
     val qt = pt.select(col("query_id"), col("token")).distinct()
-    val terms = qt.select(col("token")).distinct()
-      .as[String].collect().sorted
-    require(terms.length <= maxTerms,
-      s"phraseAgainstStoredIndex: query workload has ${terms.length} " +
-        s"distinct terms, past the $maxTerms literal-filter guard — " +
-        "shard the workload across probes")
+    val terms = probeTerms(pt, maxTerms, "phraseAgainstStoredIndex")
     val cand = spread(readStoredPostings(spark, path, meta)
       .filter(col("token").isin(terms.toSeq: _*)))
     val pp = Checkpoints.sever(spread(
@@ -1488,6 +1505,24 @@ object RetrievalOps {
     topKOf(scored, k).join(matches, Seq("query_id", "doc_id"))
       .select(col("query_id"), col("rank"), col("doc_id"),
         col("score_micro"), col("n_occurrences"))
+  }
+
+  /** The distinct `token`s of a stored probe's workload, sorted, for
+    * its literal term filter: a distinct set per partition, merged on
+    * the driver — one job and no exchange. Bounded by the workload, not
+    * the corpus; past `maxTerms` the probe (named by `probe`) fails
+    * loudly. */
+  private def probeTerms(tokens: DataFrame, maxTerms: Int,
+                         probe: String): Array[String] = {
+    val spark = tokens.sparkSession
+    import spark.implicits._
+    val terms = tokens.select(col("token")).as[String]
+      .mapPartitions(_.toSet.iterator).collect().distinct.sorted
+    require(terms.length <= maxTerms,
+      s"$probe: query workload has ${terms.length} distinct terms, past " +
+        s"the $maxTerms literal-filter guard — shard the workload across " +
+        "probes")
+    terms
   }
 
   /** True df of a probe's terms from the termstats relation when the
@@ -1525,12 +1560,7 @@ object RetrievalOps {
       .toDF("n_docs", "total_tokens", "avgdl_milli")
     val qt = Checkpoints.sever(
       queryTerms(queries, queryIdCol, queryTextCol))
-    val terms = qt.select(col("token")).distinct()
-      .as[String].collect().sorted
-    require(terms.length <= maxTerms,
-      s"proximityAgainstStoredIndex: query workload has " +
-        s"${terms.length} distinct terms, past the $maxTerms " +
-        "literal-filter guard — shard the workload across probes")
+    val terms = probeTerms(qt, maxTerms, "proximityAgainstStoredIndex")
     val cand = spread(readStoredPostings(spark, path, meta)
       .filter(col("token").isin(terms.toSeq: _*)))
     val pp = Checkpoints.sever(spread(

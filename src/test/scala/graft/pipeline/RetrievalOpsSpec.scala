@@ -432,6 +432,10 @@ class RetrievalOpsSpec extends AnyFunSuite {
     val oneShot = collectTopK(RetrievalOps.bm25TopK(
       corpusDf(0L to 15L), "text", "doc_id", queriesDf(probeQs),
       "query_id", "query_text", 5))
+    // a two-epoch window: the exact probe's df comes through the
+    // cross-epoch termstats merge (a one-epoch window skips it)
+    val window = RetrievalOps.readRetrievalIndexMeta(spark, dir)
+    assert(window.base == 0L && window.epoch == 1L && window.hasTermstats)
     val stored = collectTopK(RetrievalOps.bm25AgainstStoredIndex(spark,
       dir, queriesDf(probeQs), "query_id", "query_text", 5))
     assert(stored == oneShot)
@@ -482,6 +486,20 @@ class RetrievalOpsSpec extends AnyFunSuite {
       "text", "doc_id", qs, "query_id", "query_text", 5))
     assert(plain == oneShot,
       "exact stored probe must equal the one-shot scorer")
+  }
+
+  test("EXACT stored probe runs at most 10 Spark jobs, none of them a " +
+    "parquet schema inference") {
+    val dir = tmp("jobs")
+    RetrievalOps.writeRetrievalIndex(corpusDf(0L to 39L), "text",
+      "doc_id", dir)
+    val (_, jobs) = org.apache.spark.JobRecorder.record(spark.sparkContext)(
+      RetrievalOps.bm25AgainstStoredIndex(spark, dir, queriesDf(probeQs),
+        "query_id", "query_text", 5).collect())
+    val listing = jobs.map(_.mkString(" | ")).mkString("\n  ")
+    assert(jobs.size <= 10, s"${jobs.size} jobs:\n  $listing")
+    assert(!jobs.flatten.exists(_.startsWith("parquet at")),
+      s"a schema-inference job ran:\n  $listing")
   }
 
   private def visibleDataFiles(dir: String, rel: String): Int = {
