@@ -3,9 +3,9 @@ package graft.core
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 /** Compact binary codec for OrderBook state — used by the window-function
-  * form's aggregation-buffer spill path, the streaming state store, the
-  * checkpoint snapshots (`BookCheckpoint`) and the checkpoint restore in
-  * `BboReplayExec`. */
+  * form's aggregation-buffer spill path, the streaming state store, and
+  * `BboReplayExec`, which writes the checkpoint snapshots and restores
+  * from them (`BookCheckpoint`). */
 object BookCodec {
 
   def serialize(book: OrderBook): Array[Byte] = {

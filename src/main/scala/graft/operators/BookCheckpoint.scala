@@ -1,8 +1,6 @@
 package graft.operators
 
-import graft.core.{BookCodec, OrderBook, OrderBookException, Transitions}
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,12 +18,17 @@ import org.apache.spark.sql.types._
   *
   * Scale model matches the replay operators: one group = one book = one
   * task; the checkpoint relation is one narrow row per group (bounded
-  * by live levels, independent of event count). Resume runs through the
-  * replay operator itself ([[graft.plans.BboReplayExec]]): each state
-  * row becomes a lead row ranked before its group's events, which
-  * restores the book, and its output row is dropped. The stored state
-  * pins n — resuming at a different n fails loudly (the pinned-geometry
-  * discipline every persisted artifact here follows).
+  * by live levels, independent of event count). Every fold here runs in
+  * the replay operator itself ([[graft.plans.BboReplayExec]]):
+  * snapshots run it in its end-of-group form, which emits (partition
+  * keys, book blob) once per group instead of a row per event. A stored
+  * state enters as a lead row ranked before its group's events, which
+  * restores the book: resume drops the lead rows' output rows, and a
+  * resumed snapshot re-emits the stored book of a group with no events
+  * that day (carry-forward).
+  * The stored state pins n — resuming at a different n fails loudly (the
+  * pinned-geometry discipline every persisted artifact here follows), as
+  * does a group with two state rows.
   *
   * `mode` below is the replay operators' 0 O1, 1 O2, 2 O3; `prev` names
   * O3's prev price and qty columns.
@@ -62,40 +65,12 @@ object BookCheckpoint {
   private def snapshots(df: DataFrame, mode: Int, price: String, qty: String,
                         isBid: String, prev: Option[(String, String)], n: Int,
                         partitionBy: Seq[String], orderBy: Seq[String]): DataFrame = {
-    OrderBookOps.requireLevels(n)
     require(orderBy.nonEmpty,
       "orderBy must be non-empty: book replay is order-sensitive")
     require(!df.columns.contains("book_state"),
       "Input already has output column book_state")
-    val withEv = castedEvents(df, price, qty, isBid, prev)
-    val numIn = df.schema.size
-    val keySchema = StructType(partitionBy.map(c =>
-      df.schema(df.schema.fieldIndex(c))).toArray)
-    val outSchema = StructType(keySchema.fields :+
-      StructField("book_state", BinaryType, nullable = false))
-    implicit val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    val sortCols = orderBy.map(col)
-    val width = keySchema.size + 1
-
-    def fold(keyVals: Seq[Any], it: Iterator[Row]): Iterator[Row] = {
-      val book = new OrderBook(n)
-      it.foreach(applyRow(book, _, numIn, price, qty, isBid, mode))
-      val out = new Array[Any](width)
-      var i = 0
-      while (i < keyVals.length) { out(i) = keyVals(i); i += 1 }
-      out(width - 1) = BookCodec.serialize(book)
-      Iterator.single(new GenericRowWithSchema(out, outSchema): Row)
-    }
-
-    if (partitionBy.isEmpty) {
-      withEv.groupByKey(_ => 0)(Encoders.scalaInt)
-        .flatMapSortedGroups(sortCols: _*)((_, it) => fold(Nil, it))
-    } else {
-      val keyIdx = partitionBy.map(withEv.schema.fieldIndex).toArray
-      withEv.groupByKey(rowKey(keyIdx, keySchema))(Encoders.row(keySchema))
-        .flatMapSortedGroups(sortCols: _*)(
-          (k, it) => fold(k.toSeq, it))
-    }
+    OrderBookOps.replay(df, mode, price, qty, isBid, prev, n, partitionBy,
+      orderBy, stateOut = Some("book_state"))
   }
 
   /** Roll a checkpoint FORWARD one day: per-group, the book initializes
@@ -138,9 +113,6 @@ object BookCheckpoint {
                                prev: Option[(String, String)], n: Int,
                                partitionBy: Seq[String],
                                orderBy: Seq[String], stateCol: String): DataFrame = {
-    OrderBookOps.requireLevels(n)
-    require(orderBy.nonEmpty,
-      "orderBy must be non-empty: book replay is order-sensitive")
     require(partitionBy.nonEmpty,
       "resumed snapshots require partition keys; add a constant key " +
         "column for a single global book")
@@ -149,53 +121,9 @@ object BookCheckpoint {
     // stateCol chain breaks on its second day
     require(!df.columns.contains(stateCol),
       s"Input already has output column $stateCol")
-    val withEv = castedEvents(df, price, qty, isBid, prev)
-    val numIn = df.schema.size
-    val keySchema = StructType(partitionBy.map(c =>
-      df.schema(df.schema.fieldIndex(c))).toArray)
-    val outSchema = StructType(keySchema.fields :+
-      StructField(stateCol, BinaryType, nullable = false))
-    implicit val outEnc: Encoder[Row] = Encoders.row(outSchema)
-    val keyEnc: Encoder[Row] = Encoders.row(keySchema)
-    val evKeyIdx = partitionBy.map(withEv.schema.fieldIndex).toArray
-    val stKeyIdx = partitionBy.map(states.schema.fieldIndex).toArray
-    val stStateIdx = states.schema.fieldIndex(stateCol)
-    val sortCols = orderBy.map(col)
-    val width = keySchema.size + 1
-
-    withEv.groupByKey(rowKey(evKeyIdx, keySchema))(keyEnc)
-      .cogroupSorted(
-        states.groupByKey(rowKey(stKeyIdx, keySchema))(keyEnc))(
-        sortCols: _*)() { (key, evIt, stIt) =>
-        val stateRows = stIt.take(2).toList
-        require(stateRows.size <= 1,
-          s"resumed snapshots: multiple checkpoint rows for group " +
-            s"${key.toSeq.mkString(",")}")
-        val book = stateRows match {
-          case r :: Nil => BookCodec.deserialize(
-            r.getAs[Array[Byte]](stStateIdx))
-          case _ => new OrderBook(n)
-        }
-        require(book.n == n,
-          s"checkpoint was built at n=${book.n}; resumed snapshots " +
-            s"requested n=$n (the stored state pins n)")
-        var sawEvent = false
-        evIt.foreach { row =>
-          sawEvent = true
-          applyRow(book, row, numIn, price, qty, isBid, mode)
-        }
-        // carry-forward: a stored group with no events today keeps its
-        // state; a fresh group with no events (impossible via cogroup,
-        // but defensive) emits nothing
-        if (!sawEvent && stateRows.isEmpty) Iterator.empty
-        else {
-          val out = new Array[Any](width)
-          var i = 0
-          while (i < key.length) { out(i) = key.get(i); i += 1 }
-          out(width - 1) = BookCodec.serialize(book)
-          Iterator.single(new GenericRowWithSchema(out, outSchema): Row)
-        }
-      }
+    OrderBookOps.replay(withLeadRows(df, states, partitionBy, orderBy, stateCol),
+      mode, price, qty, isBid, prev, n, partitionBy, "__rank" +: orderBy,
+      state = Some("__state"), stateOut = Some(stateCol))
   }
 
   /** Continue an O1 replay from a [[bookStateSnapshots]] relation:
@@ -244,62 +172,34 @@ object BookCheckpoint {
                      prev: Option[(String, String)], n: Int,
                      partitionBy: Seq[String], orderBy: Seq[String],
                      stateCol: String): DataFrame = {
-    // checked here: the replay below always sees "__rank" +: orderBy
-    require(orderBy.nonEmpty,
-      "orderBy must be non-empty: book replay is order-sensitive")
     require(partitionBy.nonEmpty,
       "resume requires partition keys; add a constant key column for a " +
         "single global book")
-    val internal = Seq("__state", "__rank")
-    val clash = df.columns.toSet.intersect(internal.toSet)
+    OrderBookOps.replay(withLeadRows(df, states, partitionBy, orderBy, stateCol),
+        mode, price, qty, isBid, prev, n, partitionBy, "__rank" +: orderBy,
+        state = Some("__state"))
+      .filter(col("__rank") === 1)
+      .drop("__state", "__rank")
+  }
+
+  /** `df`'s events (`__rank` 1, null `__state`) and one lead row per
+    * `states` row: its partition keys, its `stateCol` blob in `__state`,
+    * null elsewhere, `__rank` 0 — so each group's stored book restores
+    * before its first event. */
+  private def withLeadRows(df: DataFrame, states: DataFrame,
+                           partitionBy: Seq[String], orderBy: Seq[String],
+                           stateCol: String): DataFrame = {
+    // checked here: the replay always sees "__rank" +: orderBy
+    require(orderBy.nonEmpty,
+      "orderBy must be non-empty: book replay is order-sensitive")
+    val internal = Set("__state", "__rank")
+    val clash = df.columns.toSet.intersect(internal)
     require(clash.isEmpty, s"Input already has internal columns: $clash")
     val events = df.withColumn("__state", lit(null).cast(BinaryType))
       .withColumn("__rank", lit(1))
     val leads = states.select(OrderBookOps.leadColumns(df.schema,
         partitionBy.map(k => k -> col(k)).toMap) ++
       Seq(col(stateCol).as("__state"), lit(0).as("__rank")): _*)
-    OrderBookOps.replay(events.unionByName(leads), mode, price, qty, isBid,
-        prev, n, partitionBy, "__rank" +: orderBy, state = Some("__state"))
-      .filter(col("__rank") === 1)
-      .drop(internal: _*)
+    events.unionByName(leads)
   }
-
-  /** Shared event casting: appends __g_price/__g_qty/__g_isbid (and, for
-    * O3, the nullable __g_pprice/__g_pqty) after the passthrough columns
-    * (read by the folds, never emitted). */
-  private def castedEvents(df: DataFrame, price: String, qty: String,
-                           isBid: String, prev: Option[(String, String)]): DataFrame = {
-    val base = df.withColumn("__g_price", col(price).cast(LongType))
-      .withColumn("__g_qty", col(qty).cast(LongType))
-      .withColumn("__g_isbid", col(isBid).cast(BooleanType))
-    prev.fold(base) { case (pp, pq) =>
-      base.withColumn("__g_pprice", col(pp).cast(LongType))
-        .withColumn("__g_pqty", col(pq).cast(LongType))
-    }
-  }
-
-  /** One O1/O2/O3 transition with the replay operators' null contract. */
-  private def applyRow(book: OrderBook, row: Row, numIn: Int,
-                       price: String, qty: String,
-                       isBid: String, mode: Int): Unit = {
-    val iPrice = numIn; val iQty = numIn + 1; val iBid = numIn + 2
-    val iPp = numIn + 3; val iPq = numIn + 4
-    if (row.isNullAt(iBid)) OrderBookException.missingValue(isBid)
-    if (row.isNullAt(iPrice)) OrderBookException.missingValue(price)
-    if (row.isNullAt(iQty)) OrderBookException.missingValue(qty)
-    val hasPp = mode == 2 && !row.isNullAt(iPp)
-    val hasPq = mode == 2 && !row.isNullAt(iPq)
-    Transitions(mode, book, row.getBoolean(iBid),
-      row.getLong(iPrice), row.getLong(iQty),
-      hasPp, if (hasPp) row.getLong(iPp) else 0L,
-      hasPq, if (hasPq) row.getLong(iPq) else 0L)
-  }
-
-  private def rowKey(keyIdx: Array[Int], keySchema: StructType): Row => Row =
-    r => {
-      val vs = new Array[Any](keyIdx.length)
-      var i = 0
-      while (i < keyIdx.length) { vs(i) = r.get(keyIdx(i)); i += 1 }
-      new GenericRowWithSchema(vs, keySchema): Row
-    }
 }

@@ -14,7 +14,8 @@ import org.apache.spark.sql.types._
   * ([[graft.plans.BboReplayExec]]): Spark plans a shuffle on the partition
   * keys and an in-partition sort on (keys, order), and the exec folds the
   * sorted rows with the `graft.core` kernel. Plain, decimal, parallel and
-  * resumed replays all emit their rows from it; the window aggregate
+  * resumed replays all emit their rows from it, and checkpoint snapshots
+  * their one row per book; the window aggregate
   * ([[graft.plans.BboWindow]]) is the Column/SQL surface.
   *
   * Scale model: one order book (= one `partitionBy` group, e.g. one
@@ -121,20 +122,26 @@ object OrderBookOps {
     * BboReplayExec. `mode` is 0 O1, 1 O2, 2 O3 (`prev` names O3's prev
     * price and qty columns). A non-null binary in the `state` column
     * restores the row's book from a [[graft.core.BookCodec]] blob and
-    * folds no event (checkpoint resume; see [[BookCheckpoint]]). */
+    * folds no event. With `stateOut` named, the result is one row per
+    * group, (partition keys, final book blob in `stateOut`), instead of
+    * one row per event (checkpoints; see [[BookCheckpoint]]). */
   private[operators] def replay(
       df: DataFrame, mode: Int, price: String, qty: String, isBid: String,
       prev: Option[(String, String)], n: Int,
       partitionBy: Seq[String], orderBy: Seq[String],
-      state: Option[String] = None): DataFrame = {
+      state: Option[String] = None,
+      stateOut: Option[String] = None): DataFrame = {
     import graft.plans.{BboReplayNode, BboReplayStrategy}
     import org.apache.spark.sql.GraftColumnBridge
     requireLevels(n)
     require(orderBy.nonEmpty,
       "orderBy must be non-empty: Spark provides no implicit row order, and " +
         "book replay is order-sensitive (reference README.md:182)")
-    val clash = df.columns.toSet.intersect(bboFieldNames(n).toSet)
-    require(clash.isEmpty, s"Input already has output columns: $clash")
+    val perEvent = stateOut.isEmpty
+    if (perEvent) {
+      val clash = df.columns.toSet.intersect(bboFieldNames(n).toSet)
+      require(clash.isEmpty, s"Input already has output columns: $clash")
+    }
 
     val spark = df.sparkSession
     BboReplayStrategy.ensureRegistered(spark)
@@ -153,11 +160,15 @@ object OrderBookOps {
       prev.map(p => asLong(p._1)),
       prev.map(p => asLong(p._2)),
       state.map(attr),
+      stateOut.map(catalyst.expressions.AttributeReference(_, BinaryType, nullable = false)()),
       partitionBy.map(attr(_): catalyst.expressions.Expression),
       orderBy.map(attr(_): catalyst.expressions.Expression),
-      BboReplayNode.mkBboAttrs(n),
+      if (perEvent) BboReplayNode.mkBboAttrs(n) else Nil,
       analyzed)
-    GraftColumnBridge.ofRows(spark, node)
+    // re-aliased so that a self-join of a checkpoint relation resolves:
+    // Spark renews a Project's aliases on the right side, not a custom node's
+    GraftColumnBridge.ofRows(spark, if (perEvent) node else catalyst.plans.logical.Project(
+      node.output.map(a => catalyst.expressions.Alias(a, a.name)()), node))
   }
 
   /** Columns of a lead row shaped like `schema`: each field takes its

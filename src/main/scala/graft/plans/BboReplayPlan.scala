@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.core.{BookCodec, BookKernel, OrderBookException, Transitions}
+import graft.core.{BookCodec, BookKernel, OrderBook, OrderBookException, Transitions}
 import graft.operators.OrderBookOps
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
@@ -14,7 +14,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistrib
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.SQLMetrics
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{BinaryType, LongType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.bitset.BitSetMethods
 
@@ -36,11 +36,16 @@ import org.apache.spark.unsafe.bitset.BitSetMethods
   * in-partition sort — the same minimal plan as a window function, with a
   * straight-line fold instead of frame machinery.
   *
-  * `state` is an internal input for checkpoint resume
-  * ([[graft.operators.BookCheckpoint]]): a row whose binary state is
-  * non-null restores its group's book from a [[graft.core.BookCodec]]
-  * blob instead of folding an event. Resume ranks such rows before the
-  * group's events and drops their output rows.
+  * Two internal fields serve checkpoints
+  * ([[graft.operators.BookCheckpoint]]) and are set by no public API:
+  *  - `state` (input): a row whose binary state is non-null restores its
+  *    group's book from a [[graft.core.BookCodec]] blob instead of
+  *    folding an event. Checkpoints rank such lead rows before the
+  *    group's events.
+  *  - `stateOut` (output): unset, each input row emits itself plus its
+  *    4·n levels (`child.output ++ bboAttrs`); set, the exec emits one
+  *    row per group when the group ends (partition keys, then the
+  *    non-null `BookCodec` blob of the final book) and nothing per row.
   */
 case class BboReplayNode(
     mode: Int, // 0 updates, 1 mutations, 2 modify
@@ -48,14 +53,16 @@ case class BboReplayNode(
     price: Expression, qty: Expression, isBid: Expression,
     prevPrice: Option[Expression], prevQty: Option[Expression],
     state: Option[Expression],
+    stateOut: Option[Attribute],
     partitionKeys: Seq[Expression],
     orderKeys: Seq[Expression],
     bboAttrs: Seq[Attribute],
     child: LogicalPlan) extends UnaryNode {
 
-  override def output: Seq[Attribute] = child.output ++ bboAttrs
+  override def output: Seq[Attribute] =
+    BboReplayNode.output(child.output, stateOut, partitionKeys, bboAttrs)
 
-  override def producedAttributes: AttributeSet = AttributeSet(bboAttrs)
+  override def producedAttributes: AttributeSet = AttributeSet(bboAttrs ++ stateOut)
 
   override protected def withNewChildInternal(newChild: LogicalPlan): BboReplayNode =
     copy(child = newChild)
@@ -66,6 +73,13 @@ object BboReplayNode {
   def mkBboAttrs(n: Int): Seq[Attribute] =
     OrderBookOps.bboFieldNames(n)
       .map(f => AttributeReference(f, LongType, nullable = true)())
+
+  /** The per-row output, or (partition keys, state) with `stateOut` set;
+    * the keys are then bare child attributes. */
+  def output(childOutput: Seq[Attribute], stateOut: Option[Attribute],
+             partitionKeys: Seq[Expression], bboAttrs: Seq[Attribute]): Seq[Attribute] =
+    stateOut.fold(childOutput ++ bboAttrs)(s =>
+      partitionKeys.map { case a: Attribute => a } :+ s)
 }
 
 case class BboReplayExec(
@@ -73,14 +87,16 @@ case class BboReplayExec(
     price: Expression, qty: Expression, isBid: Expression,
     prevPrice: Option[Expression], prevQty: Option[Expression],
     state: Option[Expression],
+    stateOut: Option[Attribute],
     partitionKeys: Seq[Expression],
     orderKeys: Seq[Expression],
     bboAttrs: Seq[Attribute],
     child: SparkPlan) extends UnaryExecNode {
 
-  override def output: Seq[Attribute] = child.output ++ bboAttrs
+  override def output: Seq[Attribute] =
+    BboReplayNode.output(child.output, stateOut, partitionKeys, bboAttrs)
 
-  override def producedAttributes: AttributeSet = AttributeSet(bboAttrs)
+  override def producedAttributes: AttributeSet = AttributeSet(bboAttrs ++ stateOut)
 
   override def requiredChildDistribution: Seq[Distribution] =
     if (partitionKeys.isEmpty) AllTuples :: Nil
@@ -90,7 +106,9 @@ case class BboReplayExec(
     Seq((partitionKeys ++ orderKeys).map(SortOrder(_, Ascending)))
 
   override def outputPartitioning = child.outputPartitioning
-  override def outputOrdering: Seq[SortOrder] = child.outputOrdering
+  // one state row per group keeps no order key; claim no order then
+  override def outputOrdering: Seq[SortOrder] =
+    if (stateOut.isEmpty) child.outputOrdering else Nil
 
   override lazy val metrics = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
@@ -111,16 +129,13 @@ case class BboReplayExec(
     val stateIdx = state.fold(-1) {
       case a: Attribute => childOutput.indexWhere(_.exprId == a.exprId)
     }
+    val emitState = stateOut.isDefined
     val keyExprs = partitionKeys
     val childSchema = DataTypeUtils.fromAttributes(childOutput)
     val bboSchema = DataTypeUtils.fromAttributes(bboAttrs)
 
     child.execute().mapPartitions { it =>
       val keyProj = UnsafeProjection.create(keyExprs, childOutput)
-      // appends the bbo row's 4n fields to the input row's bytes; the
-      // input's variable-length offsets are rebased, nothing is re-encoded
-      val joiner = GenerateUnsafeRowJoiner.create(childSchema, bboSchema)
-      lazy val toUnsafe = UnsafeProjection.create(childOutput, childOutput)
       // plan-time-resolved ordinal readers: the event expressions are
       // bare casts over attributes, so each field is a direct primitive
       // getter — no interpreted Cast.eval, no boxing per row
@@ -129,22 +144,20 @@ case class BboReplayExec(
       val bidF = BboReplayExec.boolField(bidE, childOutput)
       val ppF = ppE.fold(BboReplayExec.Absent)(BboReplayExec.longField(_, childOutput))
       val pqF = pqE.fold(BboReplayExec.Absent)(BboReplayExec.longField(_, childOutput))
-      val snap = new Array[Long](4 * nL)
-      val bboRow = UnsafeRow.createFromByteArray(
-        UnsafeRow.calculateBitSetWidthInBytes(4 * nL) + 32 * nL, 4 * nL)
       var book: BookKernel = null
       var curKey: UnsafeRow = null
       var restored = false
       def newBook(): Unit = {
         if (book != null) numRescans += book.rescans
-        book = BookKernel(nL)
+        // BookCodec writes an OrderBook; BookKernel(1) is an OrderBook1
+        book = if (emitState) new OrderBook(nL) else BookKernel(nL)
         restored = false
         numBooks += 1
       }
       def restore(blob: Array[Byte]): Unit = {
         // the key prints with external values (a date as a date, not a
         // day count), as the Row it names in the user's data would
-        require(!restored, "resume: multiple checkpoint rows for group " +
+        require(!restored, "multiple checkpoint rows for group " +
           (if (curKey == null) ""
            else keyExprs.zipWithIndex.map { case (e, i) =>
              CatalystTypeConverters.convertToScala(
@@ -152,24 +165,24 @@ case class BboReplayExec(
            }.mkString(",")))
         val b = BookCodec.deserialize(blob)
         require(b.n == nL,
-          s"checkpoint was built at n=${b.n}; resume requested n=$nL " +
+          s"checkpoint was built at n=${b.n}; requested n=$nL " +
             "(the stored state pins n — rebuild the checkpoint to change it)")
         book = b
         restored = true
         numRestored += 1
       }
-      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
-        if (book != null) { numRescans += book.rescans; book = null }
-      })
-
-      it.map { row =>
+      /** Folds `row` into its group's book (restoring it from a state
+        * row); true when the row starts a new group. */
+      def step(row: InternalRow): Boolean = {
+        var opened = false
         if (keyExprs.nonEmpty) {
           val k = keyProj(row)
           if (curKey == null || !curKey.equals(k)) {
             curKey = k.copy()
             newBook()
+            opened = true
           }
-        } else if (book == null) newBook()
+        } else if (book == null) { newBook(); opened = true }
 
         if (stateIdx >= 0 && !row.isNullAt(stateIdx)) restore(row.getBinary(stateIdx))
         else {
@@ -182,12 +195,46 @@ case class BboReplayExec(
             hasPP, if (hasPP) ppF.get(row) else 0L,
             hasPQ, if (hasPQ) pqF.get(row) else 0L)
         }
-        BboReplayExec.fillBbo(bboRow, snap, book.snapshotLongs(snap), nL)
-        numOutputRows += 1
-        joiner.join(row match {
-          case u: UnsafeRow => u
-          case r => toUnsafe(r)
-        }, bboRow)
+        opened
+      }
+      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
+        if (book != null) { numRescans += book.rescans; book = null }
+      })
+
+      if (emitState) {
+        // (keys, state) of a finished group: the key row joined with the blob
+        val stateProj = UnsafeProjection.create(
+          keyExprs.zipWithIndex.map { case (e, i) => BoundReference(i, e.dataType, e.nullable) } :+
+            BoundReference(keyExprs.size, BinaryType, nullable = false))
+        val joined = new JoinedRow
+        def stateRow(key: InternalRow, b: BookKernel): InternalRow = {
+          numOutputRows += 1
+          stateProj(joined(if (key == null) InternalRow.empty else key,
+            InternalRow(BookCodec.serialize(b.asInstanceOf[OrderBook]))))
+        }
+        // a row that opens a group ends the one before it; the partition's
+        // last group ends with the input (`++` evaluates its side lazily)
+        it.flatMap { row =>
+          val key = curKey; val b = book
+          if (step(row) && b != null) Some(stateRow(key, b)) else None
+        } ++ Option(book).map(stateRow(curKey, _))
+      } else {
+        // appends the bbo row's 4n fields to the input row's bytes; the
+        // input's variable-length offsets are rebased, nothing is re-encoded
+        val joiner = GenerateUnsafeRowJoiner.create(childSchema, bboSchema)
+        lazy val toUnsafe = UnsafeProjection.create(childOutput, childOutput)
+        val snap = new Array[Long](4 * nL)
+        val bboRow = UnsafeRow.createFromByteArray(
+          UnsafeRow.calculateBitSetWidthInBytes(4 * nL) + 32 * nL, 4 * nL)
+        it.map { row =>
+          step(row)
+          BboReplayExec.fillBbo(bboRow, snap, book.snapshotLongs(snap), nL)
+          numOutputRows += 1
+          joiner.join(row match {
+            case u: UnsafeRow => u
+            case r => toUnsafe(r)
+          }, bboRow)
+        }
       }
     }
   }
@@ -321,8 +368,8 @@ object BboReplayExec {
   * `GraftExtensions` for spark.sql.extensions-based setups). */
 object BboReplayStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case BboReplayNode(mode, n, p, q, b, pp, pq, st, keys, ord, attrs, child) =>
-      BboReplayExec(mode, n, p, q, b, pp, pq, st, keys, ord, attrs,
+    case BboReplayNode(mode, n, p, q, b, pp, pq, st, stOut, keys, ord, attrs, child) =>
+      BboReplayExec(mode, n, p, q, b, pp, pq, st, stOut, keys, ord, attrs,
         planLater(child)) :: Nil
     case _ => Nil
   }

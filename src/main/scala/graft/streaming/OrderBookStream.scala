@@ -44,6 +44,18 @@ object OrderBookStream {
     else if (eventTimeCol.isDefined) GroupStateTimeout.EventTimeTimeout()
     else GroupStateTimeout.ProcessingTimeTimeout()
 
+  /** The stream key contract: every stream casts its partition and
+    * order columns to long, so both must be integral. Checked when the
+    * query is built. */
+  private def requireIntegral(df: DataFrame, keys: String*): Unit =
+    keys.foreach { c =>
+      val t = df.schema(c).dataType
+      require(t == LongType || t == IntegerType || t == ShortType || t == ByteType,
+        s"column '$c' must be an integral type for the streaming replay " +
+          s"(got ${t.catalogString}); fractional keys would silently merge " +
+          "books / scramble order")
+    }
+
   /** Arm the per-group idle timeout after folding a batch:
     * processing-time as a duration from now; event-time as the group's
     * max event time SEEN ACROSS ITS WHOLE LIFETIME + duration
@@ -222,16 +234,7 @@ object OrderBookStream {
           Seq(StructField("ofi", LongType, nullable = false),
             StructField("cum_ofi", LongType, nullable = false))))
 
-    def requireIntegral(c: String): Unit = {
-      val t = df.schema(c).dataType
-      require(t == LongType || t == IntegerType ||
-        t == org.apache.spark.sql.types.ShortType ||
-        t == org.apache.spark.sql.types.ByteType,
-        s"column '$c' must be an integral type for the streaming replay " +
-          s"(got ${t.catalogString})")
-    }
-    requireIntegral(partitionBy)
-    requireIntegral(orderBy)
+    requireIntegral(df, partitionBy, orderBy)
     val work = df.select(
       col(partitionBy).cast("long").as("pkey"),
       col(orderBy).cast("long").as("okey"),
@@ -363,6 +366,7 @@ object OrderBookStream {
       StructField("n_moves", LongType, nullable = false),
       StructField("rv_x4", LongType, nullable = false)))
 
+    requireIntegral(df, partitionBy, orderBy)
     val work = df.select(
       col(partitionBy).cast("long").as("pkey"),
       col(orderBy).cast("long").as("okey"),
@@ -475,17 +479,7 @@ object OrderBookStream {
         StructField(orderBy, LongType) +:
         OrderBookOps.bboFieldNames(n).map(StructField(_, LongType, nullable = true)))
 
-    def requireIntegral(c: String): Unit = {
-      val t = df.schema(c).dataType
-      require(t == LongType || t == IntegerType ||
-        t == org.apache.spark.sql.types.ShortType ||
-        t == org.apache.spark.sql.types.ByteType,
-        s"column '$c' must be an integral type for the streaming replay " +
-          s"(got ${t.catalogString}); fractional keys would silently merge " +
-          "books / scramble order")
-    }
-    requireIntegral(partitionBy)
-    requireIntegral(orderBy)
+    requireIntegral(df, partitionBy, orderBy)
     val work = df.select(
       col(partitionBy).cast("long").as("pkey"),
       col(orderBy).cast("long").as("okey"),

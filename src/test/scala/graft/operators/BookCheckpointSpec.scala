@@ -132,6 +132,34 @@ class BookCheckpointSpec extends AnyFunSuite {
     assert(exec.metrics("numBooks").value == 3)
   }
 
+  test("snapshots and resumed snapshots run in the replay exec") {
+    val full = stream(120)
+    // 2 state rows (products 0 and 1) for 3 products; product 1 is idle on day 2
+    val state = BookCheckpoint.bookStateSnapshots(
+      full.filter(col("seq") < 60 && col("product") =!= 2),
+      "price", "qty", "is_bid", 2, Seq("product"), Seq("seq"))
+    assert(state.collect().length == 2)
+    val snapExec = graft.SpecSupport.replayExec(state)
+    assert(snapExec.metrics("numBooks").value == 2)
+    assert(snapExec.metrics("numOutputRows").value == 2)
+    val rolled = BookCheckpoint.bookStateSnapshotsResumed(
+      full.filter(col("seq") >= 60 && col("product") =!= 1), state,
+      "price", "qty", "is_bid", 2, Seq("product"), Seq("seq"))
+    assert(rolled.collect().length == 3)
+    val exec = graft.SpecSupport.replayExec(rolled)
+    assert(exec.metrics("numRestored").value == 2)
+    assert(exec.metrics("numBooks").value == 3)
+    assert(exec.metrics("numOutputRows").value == 3)
+  }
+
+  test("a snapshot relation joins with itself") {
+    val state = BookCheckpoint.bookStateSnapshots(stream(60),
+      "price", "qty", "is_bid", 1, Seq("product"), Seq("seq"))
+    val pairs = state.as("a").join(state.as("b"), col("a.product") === col("b.product"))
+      .select(col("a.book_state") === col("b.book_state")).collect()
+    assert(pairs.length == 3 && pairs.forall(_.getBoolean(0)))
+  }
+
   test("the stored state pins n: resuming at a different n fails loudly") {
     val full = stream(60)
     val state = BookCheckpoint.bookStateSnapshots(

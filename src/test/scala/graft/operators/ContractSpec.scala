@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * - the SQL-registered bbo_* functions cast their event children, so
   *   INT-typed columns resolve cleanly instead of failing at execution;
   * - parallel replay requires an integral order column (cast(long) on a
-  *   timestamp would truncate to seconds and break determinism).
+  *   timestamp would truncate to seconds and break determinism), and
+  *   every stream entry point integral partition and order keys.
   */
 class ContractSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -46,6 +47,35 @@ class ContractSpec extends AnyFunSuite {
       OrderBookOps.topNLevelsFromPriceUpdates(
         stream, "price", "qty", "is_bid", ok, Seq("product"), Seq("seq")).collect()
     }
+  }
+
+  test("every stream entry point rejects fractional keys at query build") {
+    import graft.streaming.OrderBookStream
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val live = MemoryStream[(Long, Double, Long, Double, Boolean, Long, Long, Option[Long], Option[Long])]
+      .toDF().toDF("seq", "seq_d", "product", "product_d", "is_bid", "price", "qty",
+        "prev_price", "prev_qty")
+    val entryPoints: Seq[(String, (String, String) => Any)] = Seq(
+      "updates" -> ((k, o) => OrderBookStream.topNLevelsFromPriceUpdates(
+        live, "price", "qty", "is_bid", 1, k, o)),
+      "mutations" -> ((k, o) => OrderBookStream.topNLevelsFromPriceMutations(
+        live, "price", "qty", "is_bid", 1, k, o)),
+      "modify" -> ((k, o) => OrderBookStream.topNLevelsFromPriceMutationsWithModify(
+        live, "price", "qty", "is_bid", "prev_price", "prev_qty", 1, k, o)),
+      "ofi" -> ((k, o) => OrderBookStream.ofiFromPriceUpdates(
+        live, "price", "qty", "is_bid", k, o)),
+      "summary" -> ((k, o) => OrderBookStream.analyticsSummaryStream(
+        live, "price", "qty", "is_bid", k, o)))
+    for ((name, build) <- entryPoints;
+         (key, order, bad) <- Seq(("product_d", "seq", "product_d"), ("product", "seq_d", "seq_d"))) {
+      val e = intercept[IllegalArgumentException](build(key, order))
+      assert(e.getMessage.contains(s"column '$bad' must be an integral type") &&
+        e.getMessage.contains("fractional keys would silently merge books / scramble order"),
+        s"$name: ${e.getMessage}")
+    }
+    // integral keys build
+    entryPoints.foreach { case (_, build) => build("product", "seq") }
   }
 
   test("SQL bbo function accepts INT-typed price/qty columns") {

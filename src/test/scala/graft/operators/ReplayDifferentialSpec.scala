@@ -13,8 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * fold ([[graft.CoreFoldOracle]]): 40 streams per mode, drawn from a
   * fixed seed with [[EventGens]]' generators (crossed books, qty 0 on
   * absent levels), each followed by a full drain and a refill. The exec,
-  * the window aggregate, the parallel-prefix replay and a checkpoint
-  * resume must all match the oracle bit for bit at n = 1, 2 and 5. All
+  * the window aggregate, the parallel-prefix replay, a checkpoint resume
+  * and a resume from a checkpoint rolled forward one day (snapshot,
+  * resumed snapshot, resume) must all match the oracle bit for bit at
+  * n = 1, 2 and 5. All
   * streams of a mode share one DataFrame keyed by stream id, so each
   * (form, mode, n) is one Spark action. */
 class ReplayDifferentialSpec extends AnyFunSuite {
@@ -25,6 +27,8 @@ class ReplayDifferentialSpec extends AnyFunSuite {
   private val Streams = 40
   /** Resume splits each stream here: day 1 is seq < Split. */
   private val Split = 30L
+  /** The chained checkpoint's day 2 ends here; day 3 is seq >= Split2. */
+  private val Split2 = 60L
   private val prev = Some(("prev_price", "prev_qty"))
 
   /** Stream `s` of `mode`: a generated body, a full drain of every live
@@ -87,23 +91,51 @@ class ReplayDifferentialSpec extends AnyFunSuite {
       "stream", "seq", segments = 3)
   }
 
-  /** Day 1 (seq < Split) folded to a checkpoint, day 2 resumed from it. */
-  private def resume(mode: Int, df: DataFrame, n: Int): DataFrame = {
-    val (day1, day2) = (df.filter(col("seq") < Split), df.filter(col("seq") >= Split))
-    val (keys, order) = (Seq("stream"), Seq("seq"))
+  private val (keys, order) = (Seq("stream"), Seq("seq"))
+
+  /** The mode's end-of-day checkpoint of `day`. */
+  private def snapshot(mode: Int, day: DataFrame, n: Int): DataFrame = mode match {
+    case 0 => BookCheckpoint.bookStateSnapshots(day, "price", "qty", "is_bid", n, keys, order)
+    case 1 => BookCheckpoint.bookStateSnapshotsFromMutations(day, "price", "qty", "is_bid",
+      n, keys, order)
+    case _ => BookCheckpoint.bookStateSnapshotsFromMutationsWithModify(day, "price", "qty",
+      "is_bid", "prev_price", "prev_qty", n, keys, order)
+  }
+
+  /** `states` rolled forward over `day`: the next end-of-day checkpoint. */
+  private def rolled(mode: Int, day: DataFrame, states: DataFrame, n: Int): DataFrame =
     mode match {
-      case 0 => BookCheckpoint.resumeTopNLevelsFromPriceUpdates(day2,
-        BookCheckpoint.bookStateSnapshots(day1, "price", "qty", "is_bid", n, keys, order),
+      case 0 => BookCheckpoint.bookStateSnapshotsResumed(day, states,
         "price", "qty", "is_bid", n, keys, order)
-      case 1 => BookCheckpoint.resumeTopNLevelsFromPriceMutations(day2,
-        BookCheckpoint.bookStateSnapshotsFromMutations(day1, "price", "qty", "is_bid",
-          n, keys, order),
+      case 1 => BookCheckpoint.bookStateSnapshotsResumedFromMutations(day, states,
         "price", "qty", "is_bid", n, keys, order)
-      case _ => BookCheckpoint.resumeTopNLevelsFromPriceMutationsWithModify(day2,
-        BookCheckpoint.bookStateSnapshotsFromMutationsWithModify(day1, "price", "qty",
-          "is_bid", "prev_price", "prev_qty", n, keys, order),
+      case _ => BookCheckpoint.bookStateSnapshotsResumedFromMutationsWithModify(day, states,
         "price", "qty", "is_bid", "prev_price", "prev_qty", n, keys, order)
     }
+
+  /** `day`'s replay rows, each book starting from its row in `states`. */
+  private def resumed(mode: Int, day: DataFrame, states: DataFrame, n: Int): DataFrame =
+    mode match {
+      case 0 => BookCheckpoint.resumeTopNLevelsFromPriceUpdates(day, states,
+        "price", "qty", "is_bid", n, keys, order)
+      case 1 => BookCheckpoint.resumeTopNLevelsFromPriceMutations(day, states,
+        "price", "qty", "is_bid", n, keys, order)
+      case _ => BookCheckpoint.resumeTopNLevelsFromPriceMutationsWithModify(day, states,
+        "price", "qty", "is_bid", "prev_price", "prev_qty", n, keys, order)
+    }
+
+  private def days(df: DataFrame, from: Long, until: Long): DataFrame =
+    df.filter(col("seq") >= from && col("seq") < until)
+
+  /** Day 1 (seq < Split) folded to a checkpoint, day 2 resumed from it. */
+  private def resume(mode: Int, df: DataFrame, n: Int): DataFrame =
+    resumed(mode, days(df, Split, Long.MaxValue), snapshot(mode, days(df, 0, Split), n), n)
+
+  /** Day 1 snapshotted, rolled forward over day 2 (Split <= seq < Split2),
+    * and day 3 resumed from the rolled checkpoint. */
+  private def chained(mode: Int, df: DataFrame, n: Int): DataFrame = {
+    val state2 = rolled(mode, days(df, Split, Split2), snapshot(mode, days(df, 0, Split), n), n)
+    resumed(mode, days(df, Split2, Long.MaxValue), state2, n)
   }
 
   /** (stream, seq, 4·n levels) of every output row, in (stream, seq) order. */
@@ -132,6 +164,8 @@ class ReplayDifferentialSpec extends AnyFunSuite {
           same(levels(run(mode, df, n), n), oracle, s"$form n=$n")
         same(levels(resume(mode, df, n), n), oracle.filter(_.getLong(1) >= Split),
           s"resume n=$n")
+        same(levels(chained(mode, df, n), n), oracle.filter(_.getLong(1) >= Split2),
+          s"chained snapshots n=$n")
       }
     }
   }

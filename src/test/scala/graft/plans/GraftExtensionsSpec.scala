@@ -41,7 +41,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       def attr(n: String) = analyzed.output.find(_.name == n).get
       val node = BboReplayNode(0, 1,
         Cast(attr("price"), LongType), Cast(attr("qty"), LongType),
-        Cast(attr("is_bid"), BooleanType), None, None, None,
+        Cast(attr("is_bid"), BooleanType), None, None, None, None,
         Seq(attr("product")), Seq(attr("seq")),
         BboReplayNode.mkBboAttrs(1), analyzed)
       val replayed = org.apache.spark.sql.GraftColumnBridge.ofRows(spark, node)
