@@ -37,7 +37,11 @@ import org.apache.spark.sql.DataFrame
   * stored BM25 probe is the worked case: its termstats slice has one
   * reader in the exact and capped modes (the df broadcast) and is not
   * severed there, while the max-score mode reads the same slice three
-  * times (df, per-term and per-block bounds) and severs it.
+  * times (df, per-term and per-block bounds) and severs it. Its query
+  * terms have two readers, the literal term filter and the scoring
+  * join, and both want them on the driver (the filter as literals, the
+  * join as a broadcast), so they are collected once and re-planted as
+  * a local relation instead of severed.
   */
 object Checkpoints {
   /** Session conf key selecting the severing mode: "local" | "reliable". */

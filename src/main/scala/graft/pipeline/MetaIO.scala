@@ -209,12 +209,14 @@ private[graft] object MetaIO {
   }
 
   /** …and its probe-shape read: numBits/64 longs, a scalar-sized
-    * collect (≤16 MB at the build cap), reassembled by word index. */
+    * collect (≤16 MB at the build cap), reassembled by word index. The
+    * schema comes from the footer ([[StoredParquet]]), so the read runs
+    * no schema-inference job. */
   def readBloomWords(spark: SparkSession, dir: String,
                      numBits: Int): Array[Long] = {
     import org.apache.spark.sql.functions.col
     val words = new Array[Long](numBits / 64)
-    spark.read.parquet(dir)
+    StoredParquet.read(spark, dir)
       .select(col("word_idx"), col("word")).collect()
       .foreach(r => words(r.getInt(0)) = r.getLong(1))
     words

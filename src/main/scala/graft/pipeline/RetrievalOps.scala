@@ -55,9 +55,20 @@ object RetrievalOps {
     * exchange moves ONLY the probed (term-filtered) rows, never the
     * artifact; the width is the environment's own parallelism, so on a
     * real cluster a large probe spreads to the fleet and a small one
-    * costs one tiny round-robin pass. */
+    * costs one tiny pass.
+    *
+    * The rows hash by `doc_id`, so every posting of a doc lands in one
+    * task. Each consumer groups or joins on `doc_id` (the per-(query,
+    * doc) score rollup, the positional self-joins, `cand ⋈ pairs`), and
+    * `HashPartitioning(doc_id)` already satisfies those distributions
+    * through the broadcast joins: a (query, doc) score is complete in
+    * the task that holds its postings, and only per-query partial heaps
+    * cross the top-K exchange. A round-robin spread expanded 45,584
+    * probed postings into 544,763 partial sums that crossed a second
+    * exchange (`retrieval_serve` seed 1, 4 cores). */
   private def spread(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+      col("doc_id"))
 
   /** Per-(token, doc) term frequencies — the postings relation, ONE
     * partial-aggregated corpus shuffle. */
@@ -83,15 +94,30 @@ object RetrievalOps {
       .select(col("token"), col("doc_id"), col("tf"), col("dl"))
   }
 
-  /** One-row corpus stats frame from the narrow (doc_id, dl) relation:
-    * (n_docs, total_tokens, avgdl_milli) — broadcast into the scorer,
-    * never collected to the driver. */
-  private def statsOf(docLens: DataFrame): DataFrame =
-    docLens.agg(count(lit(1)).as("n_docs"),
-        sum(col("dl")).as("total_tokens"))
-      .select(col("n_docs"), col("total_tokens"),
-        div(lit(1000L) * col("total_tokens"), col("n_docs"))
-          .as("avgdl_milli"))
+  /** The corpus scalars the scorer reads, as two driver longs:
+    * `avgdlMilli` = ⌊1000·T / N⌋ (see the object scaladoc). [[attach]]
+    * adds them to a relation as the literal columns `n_docs` and
+    * `avgdl_milli`, so no stats relation is joined or broadcast. */
+  private final case class CorpusStats(nDocs: Long, avgdlMilli: Long) {
+    def attach(df: DataFrame): DataFrame =
+      df.select(col("*"), lit(nDocs).as("n_docs"),
+        lit(avgdlMilli).as("avgdl_milli"))
+  }
+
+  private object CorpusStats {
+    /** From the corpus counters: N docs, T tokens. */
+    def of(nDocs: Long, totalTokens: Long): CorpusStats =
+      CorpusStats(nDocs, 1000L * totalTokens / math.max(nDocs, 1L))
+  }
+
+  /** Corpus stats from the narrow (doc_id, dl) relation: one aggregate
+    * row, collected to the driver (an aggregate stage plus a collect —
+    * the jobs a broadcast of the same row cost). */
+  private def statsOf(docLens: DataFrame): CorpusStats = {
+    val r = docLens.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)))
+      .collect()(0)
+    CorpusStats.of(r.getLong(0), r.getLong(1))
+  }
 
   /** Per-query DISTINCT terms, loudly bounded by [[MaxQueryTerms]]
     * (the overflow-headroom contract above — enforced in-plan via
@@ -129,9 +155,11 @@ object RetrievalOps {
     * computable from `cand` itself. The capped path passes the TRUE
     * pre-truncation df instead, so truncating a posting list never
     * inflates a term's idf. Both joins broadcast the query-workload
-    * side; the only corpus-proportional shuffle is the per-(query,
-    * doc) score rollup, partial-aggregated. */
-  private def scoredContrib(cand: DataFrame, stats: DataFrame,
+    * side and keep `cand`'s partitioning, so a `cand` hashed by doc_id
+    * ([[spread]]) rolls up per (query, doc) without an exchange; any
+    * other `cand` (the capped mode's by-token truncation) shuffles its
+    * partial sums once. */
+  private def scoredContrib(cand: DataFrame, stats: CorpusStats,
                             qterms: DataFrame,
                             dfreqOverride: Option[DataFrame] = None)
       : DataFrame = {
@@ -145,7 +173,7 @@ object RetrievalOps {
     cand
       .join(broadcast(qterms), Seq("token"))
       .join(broadcast(dfreq), Seq("token"))
-      .crossJoin(broadcast(stats))
+      .transform(stats.attach)
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(contrib).as("score_micro"))
   }
@@ -159,7 +187,7 @@ object RetrievalOps {
     * once per query. True df still comes from one partial-agg pass
     * over the full `cand`, so restricted scores equal the exact
     * scorer's for the same pairs bit for bit. */
-  private def scoredContribForPairs(cand: DataFrame, stats: DataFrame,
+  private def scoredContribForPairs(cand: DataFrame, stats: CorpusStats,
                                     qt: DataFrame, pairs: DataFrame,
                                     dfreqOverride: Option[DataFrame] = None)
       : DataFrame = {
@@ -173,7 +201,7 @@ object RetrievalOps {
     cand.join(pairs.select(col("query_id"), col("doc_id")), Seq("doc_id"))
       .join(broadcast(qt), Seq("query_id", "token"), "left_semi")
       .join(broadcast(dfreq), Seq("token"))
-      .crossJoin(broadcast(stats))
+      .transform(stats.attach)
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(contrib).as("score_micro"))
   }
@@ -197,7 +225,7 @@ object RetrievalOps {
 
   /** Score candidate postings against the query terms and keep each
     * query's top-K — [[scoredContrib]] + [[topKOf]]. */
-  private def scoreTopK(cand: DataFrame, stats: DataFrame,
+  private def scoreTopK(cand: DataFrame, stats: CorpusStats,
                         qterms: DataFrame, k: Int,
                         dfreqOverride: Option[DataFrame] = None)
       : DataFrame =
@@ -231,7 +259,7 @@ object RetrievalOps {
     * dfCap rows per token before the exchange, so the shuffle carries
     * ≤ dfCap × input-partitions rows per token, not the full posting
     * list. */
-  private def truncatePerTerm(cand: DataFrame, stats: DataFrame,
+  private def truncatePerTerm(cand: DataFrame, stats: CorpusStats,
                               dfCap: Int,
                               dfreqOverride: Option[DataFrame] = None)
       : (DataFrame, DataFrame) = {
@@ -241,7 +269,7 @@ object RetrievalOps {
       cand.groupBy(col("token")).agg(count(lit(1)).as("__df")))
     val w = Window.partitionBy(col("token"))
       .orderBy(col("__tfm").desc, col("doc_id").asc)
-    val kept = cand.crossJoin(broadcast(stats))
+    val kept = cand.transform(stats.attach)
       .withColumn("__tfm", tfMicro)
       .withColumn("__prn", row_number().over(w))
       .filter(col("__prn") <= dfCap)
@@ -364,7 +392,7 @@ object RetrievalOps {
     * row-group-pruned scan, or the one-shot path's already-severed
     * postings). Only the term-, query-, and candidate-sized relations
     * materialize. */
-  private def maxScoreCore(cand: DataFrame, stats: DataFrame,
+  private def maxScoreCore(cand: DataFrame, stats: CorpusStats,
                            qt: DataFrame, k: Int, dfSplit: Int,
                            dfreqOverride: Option[DataFrame] = None,
                            ubOverride: Option[DataFrame] = None,
@@ -417,10 +445,10 @@ object RetrievalOps {
       // less pruning in the worst case, identical output either way
       case Some(u) => u.join(broadcast(highTerms), Seq("token"),
         "left_semi")
-      case None => candHigh.crossJoin(broadcast(stats))
+      case None => candHigh.transform(stats.attach)
         .groupBy(col("token")).agg(max(tfMicro).as("__maxtfm"))
         .join(broadcast(dfreq), Seq("token"))
-        .crossJoin(broadcast(stats))
+        .transform(stats.attach)
         .select(col("token"), div(idfCapped * col("__maxtfm"),
           lit(1000000L)).as("__ub"))
     }
@@ -472,7 +500,7 @@ object RetrievalOps {
     val highContrib = candHigh
       .join(candidates.select(col("query_id"), col("doc_id")), Seq("doc_id"))
       .join(broadcast(qtHigh), Seq("query_id", "token"), "left_semi")
-      .crossJoin(broadcast(stats))
+      .transform(stats.attach)
       .join(broadcast(dfreq), Seq("token"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(div(idfCapped * tfMicro, lit(1000000L))).as("__sh"))
@@ -505,7 +533,7 @@ object RetrievalOps {
     * Graceful degradation: a query with < k seed candidates keeps
     * θ = −∞ and every block survives — the exact scorer's cost, never
     * worse than the pre-block-max fallback. */
-  private def blockMaxFallback(cand: DataFrame, stats: DataFrame,
+  private def blockMaxFallback(cand: DataFrame, stats: CorpusStats,
                                qtFall: DataFrame, thetaFall: DataFrame,
                                k: Int, dfreq: DataFrame,
                                blockUb: DataFrame, blockCount: Long,
@@ -571,7 +599,7 @@ object RetrievalOps {
     val contrib = div(least(idfRaw, lit(IdfCapMicro)) * tfMicro,
       lit(1000000L))
     val blockScored = survPost.join(broadcast(dfreq), Seq("token"))
-      .crossJoin(broadcast(stats))
+      .transform(stats.attach)
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(contrib).as("score_micro"))
     blockScored.unionByName(
@@ -790,7 +818,7 @@ object RetrievalOps {
     * takes the r17 match-first lane — full matching restricted to
     * those queries, scored per matched pair. Exact output either way;
     * K′ trades prefix width against fallback frequency. */
-  private def rankedForensicTopK(cand: DataFrame, stats: DataFrame,
+  private def rankedForensicTopK(cand: DataFrame, stats: CorpusStats,
                                  qt: DataFrame, k: Int, dfreq: DataFrame,
                                  restrictedMatch: DataFrame => DataFrame,
                                  extraCol: String): DataFrame = {
@@ -1347,9 +1375,10 @@ object RetrievalOps {
     * query never mentions, and corpus stats come from the meta row —
     * no corpus-wide job anywhere at probe time.
     *
-    * The term set is collected to the driver (bounded by the query
-    * WORKLOAD, not the corpus; `maxTerms` guards the literal-filter
-    * size loudly — a workload past it should shard its queries).
+    * The query-term rows are collected to the driver once (bounded by
+    * the query WORKLOAD, not the corpus; `maxTerms` guards the
+    * literal-filter size loudly — a workload past it should shard its
+    * queries), see [[probeWorkload]].
     *
     * `dfCapPerTerm` turns on the BOUNDED serving mode
     * ([[truncatePerTerm]]): each probed term's posting list truncates
@@ -1360,22 +1389,23 @@ object RetrievalOps {
     * count), which the cap repays as soon as one term's df exceeds
     * it.
     *
-    * Jobs of one exact probe on a termstats artifact (10; pinned by
-    * `RetrievalOpsSpec`). Every stored relation is read with its schema
-    * from the parquet footer ([[StoredParquet]]), so no schema-inference
-    * job runs. Before the DataFrame returns:
+    * Jobs of one exact probe on a termstats artifact (7, with two
+    * exchanges; pinned by `RetrievalOpsSpec`). Every stored relation is
+    * read with its schema from the parquet footer ([[StoredParquet]]),
+    * so no schema-inference job runs, and the corpus stats ride as
+    * literals ([[CorpusStats]]). Before the DataFrame returns:
     *  1. the meta row's collect;
-    *  2. the query-term sever (two readers: the term collect and the
-    *     scoring join);
-    *  3. the distinct-term collect ([[probeTerms]], no exchange).
+    *  2. the query-term collect ([[probeWorkload]]).
     * Under AQE, at the caller's action:
-    *  4. to 6. three broadcasts: the query terms, the termstats df slice
-    *     (read in place: one reader, so not severed) and the one-row
-    *     corpus stats;
-    *  7. the spread of the term-filtered postings;
-    *  8. the per-(query, doc) score rollup;
-    *  9. the per-query top-K;
-    *  10. the result stage.
+    *  3. and 4. two broadcasts: the query terms (a local relation) and
+    *     the termstats df slice (read in place: one reader, so not
+    *     severed);
+    *  5. the spread of the term-filtered postings, hashed by doc_id:
+    *     each (query, doc) score then sums inside the task that holds
+    *     the doc's postings, with no exchange of its own;
+    *  6. the per-query top-K, whose exchange moves per-task partial
+    *     heaps;
+    *  7. the result stage.
     * A window of several epochs adds the termstats merge's exchange. */
   def bm25AgainstStoredIndex(spark: SparkSession, path: String,
                              queries: DataFrame, queryIdCol: String,
@@ -1387,13 +1417,10 @@ object RetrievalOps {
       "pick ONE serving mode: dfCapPerTerm (bounded, approximate past " +
         "the cap) or maxScoreSplit (bounded common case, always exact)")
     val meta = readRetrievalIndexMeta(spark, path)
-    import spark.implicits._
-    val stats = Seq((meta.nDocs, meta.totalTokens,
-        1000L * meta.totalTokens / math.max(meta.nDocs, 1L)))
-      .toDF("n_docs", "total_tokens", "avgdl_milli")
-    val qt = Checkpoints.sever(
-      queryTerms(queries, queryIdCol, queryTextCol))
-    val terms = probeTerms(qt, maxTerms, "bm25AgainstStoredIndex")
+    val stats = CorpusStats.of(meta.nDocs, meta.totalTokens)
+    val (qt, terms) = probeWorkload(
+      queryTerms(queries, queryIdCol, queryTextCol), maxTerms,
+      "bm25AgainstStoredIndex")
     val cand0 = readStoredPostings(spark, path, meta)
       .filter(col("token").isin(terms.toSeq: _*))
     val cand = spread(cand0)
@@ -1424,12 +1451,13 @@ object RetrievalOps {
         div(lit(9000L) * col("min_dl"), col("avgdl_milli")))
     // per-(token, block) upper bounds from the stored cell maxima, idf
     // from the termstats df — (probed terms × their blocks)-sized,
-    // severed + spread once by the caller
+    // severed + spread once by the caller (round-robin: the rows carry
+    // no doc_id for spread to hash)
     def blockUbOf(t: DataFrame): DataFrame =
       readStoredBlockstats(spark, path, meta)
         .filter(col("token").isin(terms.toSeq: _*))
         .join(broadcast(t.select(col("token"), col("df"))), Seq("token"))
-        .crossJoin(broadcast(stats))
+        .transform(stats.attach)
         .select(col("token"), col("blk"),
           div(idfUbCol * tfmUbCol, lit(1000000L)).as("__bub"))
     (dfCapPerTerm, maxScoreSplit) match {
@@ -1444,7 +1472,7 @@ object RetrievalOps {
         scoreTopK(kept, stats, qt, k, dfreqOverride = Some(dfreq))
       case (_, Some(split)) =>
         val ubStore = ts.map { t =>
-          t.crossJoin(broadcast(stats))
+          t.transform(stats.attach)
             .select(col("token"),
               div(idfUbCol * tfmUbCol, lit(1000000L)).as("__ub"))
         }
@@ -1452,7 +1480,9 @@ object RetrievalOps {
         // pruning (see blockUbOf)
         val blockOpt = ts match {
           case Some(t) if meta.blockCount > 0L =>
-            Some((Checkpoints.sever(spread(blockUbOf(t))), meta.blockCount))
+            Some((Checkpoints.sever(blockUbOf(t)
+              .repartition(spark.sparkContext.defaultParallelism)),
+              meta.blockCount))
           case _ => None
         }
         maxScoreCore(cand, stats, qt, k, split, dfStore, ubStore, blockOpt,
@@ -1485,14 +1515,11 @@ object RetrievalOps {
       s"retrieval index at $path is bag-of-words only (built without " +
         "withPositions) — phrase probes need the positional relation; " +
         "rebuild via writeRetrievalIndex(..., withPositions = true)")
-    import spark.implicits._
-    val stats = Seq((meta.nDocs, meta.totalTokens,
-        1000L * meta.totalTokens / math.max(meta.nDocs, 1L)))
-      .toDF("n_docs", "total_tokens", "avgdl_milli")
-    val pt = Checkpoints.sever(
-      phraseTerms(queries, queryIdCol, queryTextCol))
+    val stats = CorpusStats.of(meta.nDocs, meta.totalTokens)
+    val (pt, terms) = probeWorkload(
+      phraseTerms(queries, queryIdCol, queryTextCol), maxTerms,
+      "phraseAgainstStoredIndex")
     val qt = pt.select(col("query_id"), col("token")).distinct()
-    val terms = probeTerms(pt, maxTerms, "phraseAgainstStoredIndex")
     val cand = spread(readStoredPostings(spark, path, meta)
       .filter(col("token").isin(terms.toSeq: _*)))
     val pp = Checkpoints.sever(spread(
@@ -1507,22 +1534,24 @@ object RetrievalOps {
         col("score_micro"), col("n_occurrences"))
   }
 
-  /** The distinct `token`s of a stored probe's workload, sorted, for
-    * its literal term filter: a distinct set per partition, merged on
-    * the driver — one job and no exchange. Bounded by the workload, not
-    * the corpus; past `maxTerms` the probe (named by `probe`) fails
+  /** A stored probe's workload rows ([[queryTerms]] or [[phraseTerms]]),
+    * collected once — one job, where the width/null guard's
+    * `raise_error` fires. Returns them as a local relation for the
+    * scoring joins, with their distinct `token`s, sorted, for the
+    * literal term filter. The rows are the query workload's, which the
+    * scoring join's broadcast brings to the driver anyway; past
+    * `maxTerms` distinct terms the probe (named by `probe`) fails
     * loudly. */
-  private def probeTerms(tokens: DataFrame, maxTerms: Int,
-                         probe: String): Array[String] = {
-    val spark = tokens.sparkSession
-    import spark.implicits._
-    val terms = tokens.select(col("token")).as[String]
-      .mapPartitions(_.toSet.iterator).collect().distinct.sorted
+  private def probeWorkload(rel: DataFrame, maxTerms: Int,
+                            probe: String): (DataFrame, Array[String]) = {
+    val rows = rel.collect()
+    val terms = rows.map(_.getAs[String]("token")).distinct.sorted
     require(terms.length <= maxTerms,
       s"$probe: query workload has ${terms.length} distinct terms, past " +
         s"the $maxTerms literal-filter guard — shard the workload across " +
         "probes")
-    terms
+    (rel.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      rel.schema), terms)
   }
 
   /** True df of a probe's terms from the termstats relation when the
@@ -1554,13 +1583,10 @@ object RetrievalOps {
         "withPositions) — proximity probes need the positional " +
         "relation; rebuild via writeRetrievalIndex(..., " +
         "withPositions = true)")
-    import spark.implicits._
-    val stats = Seq((meta.nDocs, meta.totalTokens,
-        1000L * meta.totalTokens / math.max(meta.nDocs, 1L)))
-      .toDF("n_docs", "total_tokens", "avgdl_milli")
-    val qt = Checkpoints.sever(
-      queryTerms(queries, queryIdCol, queryTextCol))
-    val terms = probeTerms(qt, maxTerms, "proximityAgainstStoredIndex")
+    val stats = CorpusStats.of(meta.nDocs, meta.totalTokens)
+    val (qt, terms) = probeWorkload(
+      queryTerms(queries, queryIdCol, queryTextCol), maxTerms,
+      "proximityAgainstStoredIndex")
     val cand = spread(readStoredPostings(spark, path, meta)
       .filter(col("token").isin(terms.toSeq: _*)))
     val pp = Checkpoints.sever(spread(

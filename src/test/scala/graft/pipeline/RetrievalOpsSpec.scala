@@ -2,6 +2,10 @@ package graft.pipeline
 
 import graft.SparkTestSession
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -488,6 +492,8 @@ class RetrievalOpsSpec extends AnyFunSuite {
       "exact stored probe must equal the one-shot scorer")
   }
 
+  // the name keeps its original bound; the pin is 7 jobs (the list is
+  // in bm25AgainstStoredIndex's scaladoc)
   test("EXACT stored probe runs at most 10 Spark jobs, none of them a " +
     "parquet schema inference") {
     val dir = tmp("jobs")
@@ -497,9 +503,86 @@ class RetrievalOpsSpec extends AnyFunSuite {
       RetrievalOps.bm25AgainstStoredIndex(spark, dir, queriesDf(probeQs),
         "query_id", "query_text", 5).collect())
     val listing = jobs.map(_.mkString(" | ")).mkString("\n  ")
-    assert(jobs.size <= 10, s"${jobs.size} jobs:\n  $listing")
+    assert(jobs.size <= 7, s"${jobs.size} jobs:\n  $listing")
     assert(!jobs.flatten.exists(_.startsWith("parquet at")),
       s"a schema-inference job ran:\n  $listing")
+  }
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
+
+  /** Hash keys of every shuffle in an executed (AQE final) plan; a
+    * non-hash shuffle lists its partitioning's name. */
+  private def shuffleKeys(out: DataFrame): Seq[Seq[String]] = {
+    val plan = out.queryExecution.executedPlan
+    assert(plan.toString.contains("isFinalPlan=true"),
+      "AQE must have finalized the plan")
+    PlanWalk.collect(plan) { case s: ShuffleExchangeExec =>
+      s.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.map {
+          case a: Attribute => a.name
+          case e => e.sql
+        }
+        case p => Seq(p.getClass.getSimpleName)
+      }
+    }
+  }
+
+  test("EXACT stored probe's final plan spreads candidates by doc_id and " +
+    "never shuffles (query_id, doc_id) partial sums") {
+    val dir = tmp("plan")
+    RetrievalOps.writeRetrievalIndex(corpusDf(0L to 39L), "text",
+      "doc_id", dir)
+    val out = RetrievalOps.bm25AgainstStoredIndex(spark, dir,
+      queriesDf(probeQs), "query_id", "query_text", 5)
+    out.collect()
+    val keys = shuffleKeys(out)
+    assert(!keys.exists(k => k.contains("query_id") && k.contains("doc_id")),
+      s"a per-(query, doc) exchange: $keys")
+    // the candidate spread, then the per-query top-K
+    assert(keys.sortBy(_.mkString(",")) == Seq(Seq("doc_id"), Seq("query_id")),
+      s"shuffle keys: $keys")
+  }
+
+  test("all-tied corpus: every stored mode ≡ its one-shot scorer, ties " +
+    "broken by doc_id") {
+    // every doc has the same text, so every score ties and only doc_id
+    // orders the top-K; the ids are sparse and partly negative, so the
+    // doc_id spread scatters them over every task
+    val ids = (0L until 24L).map(i => i * 7919L - 50000L)
+    val docs = ids.map(i => (i, "alpha beta gamma alpha beta")).toDF("doc_id", "text")
+    val qs = queriesDf(Seq((1L, "alpha beta"), (2L, "gamma"),
+      (3L, "beta gamma alpha"), (4L, "delta alpha"), (5L, "beta alpha")))
+    val dir = tmp("ties")
+    RetrievalOps.writeRetrievalIndex(docs, "text", "doc_id", dir,
+      withPositions = true)
+    val k = 5
+    def same(label: String, a: DataFrame, b: DataFrame): Unit = {
+      val x = a.select(b.columns.map(col): _*)
+      assert(x.exceptAll(b).isEmpty && b.exceptAll(x).isEmpty,
+        s"$label differs from its one-shot scorer")
+    }
+    val oneShot = RetrievalOps.bm25TopK(docs, "text", "doc_id", qs,
+      "query_id", "query_text", k).localCheckpoint()
+    assert(oneShot.count() == 5L * k, "every query matches every doc")
+    def stored(cap: Option[Int], split: Option[Int]): DataFrame =
+      RetrievalOps.bm25AgainstStoredIndex(spark, dir, qs, "query_id",
+        "query_text", k, dfCapPerTerm = cap, maxScoreSplit = split)
+    same("exact", stored(None, None), oneShot)
+    // a cap under df (24) but at least k keeps the k lowest doc_ids of
+    // every term, whose scores are complete: still exact
+    same("capped", stored(Some(k + 3), None), oneShot)
+    same("max-score, all terms high", stored(None, Some(1)), oneShot)
+    same("max-score, all terms low", stored(None, Some(1000)), oneShot)
+    same("phrase",
+      RetrievalOps.phraseAgainstStoredIndex(spark, dir, qs, "query_id",
+        "query_text", k),
+      RetrievalOps.bm25PhraseTopK(docs, "text", "doc_id", qs, "query_id",
+        "query_text", k))
+    same("proximity",
+      RetrievalOps.proximityAgainstStoredIndex(spark, dir, qs, "query_id",
+        "query_text", k, windowTokens = 3),
+      RetrievalOps.bm25ProximityTopK(docs, "text", "doc_id", qs,
+        "query_id", "query_text", k, windowTokens = 3))
   }
 
   private def visibleDataFiles(dir: String, rel: String): Int = {
@@ -597,6 +680,16 @@ class RetrievalOpsSpec extends AnyFunSuite {
         "query_id", "query_text", 5, maxTerms = 4)
     }
     assert(e.getMessage.contains("shard the workload"))
+    // the per-query width guard fires while the probe is built, in the
+    // one collect of its query terms
+    val wide = (0 to RetrievalOps.MaxQueryTerms).map(i => s"w$i")
+      .mkString(" ")
+    val e2 = intercept[Exception] {
+      RetrievalOps.bm25AgainstStoredIndex(spark, dir,
+        queriesDf(Seq((1L, wide))), "query_id", "query_text", 5)
+    }
+    assert(e2.getMessage != null && e2.getMessage.contains(
+      s"more than ${RetrievalOps.MaxQueryTerms} distinct"), e2.getMessage)
   }
 
   test("BLOCK-MAX artifact: new builds carry (token, blk, max_tf, " +

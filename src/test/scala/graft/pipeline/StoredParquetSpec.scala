@@ -38,6 +38,20 @@ class StoredParquetSpec extends AnyFunSuite {
     }
   }
 
+  test("footer schema ≡ Spark's inferred schema for a bloom-words " +
+    "relation, and the bloom read runs no schema inference") {
+    val dir = s"${tmp("bloom")}/bloom"
+    val bits = Array(0L, -1L, 0x5a5aL, Long.MinValue)
+    MetaIO.writeBloomWords(spark, bits, dir)
+    assert(StoredParquet.read(spark, dir).schema ==
+      spark.read.parquet(dir).schema)
+    val (words, jobs) = org.apache.spark.JobRecorder.record(
+      spark.sparkContext)(MetaIO.readBloomWords(spark, dir, 64 * bits.length))
+    assert(words.toSeq == bits.toSeq)
+    assert(!jobs.flatten.exists(_.startsWith("parquet at")),
+      s"a schema-inference job ran: $jobs")
+  }
+
   test("a meta written before termstats existed still reads, with its " +
     "flags false") {
     val dir = tmp("oldmeta")

@@ -34,25 +34,15 @@ class PlanAuditSpec extends AnyFunSuite {
       // Catalyst folds any constant-key equi-join disguise back to
       // this shape anyway
       "q_lm_score",
-      // the BM25 scorer attaches the corpus stats row — ONE row by
-      // construction (a global aggregate / the index meta) — via
-      // crossJoin(broadcast): the same single-row-build-side shape as
-      // q_lm_score's V scalar (the capped row crosses it twice: the
-      // truncation window needs avgdl too; the phrase row scores
-      // through the same kernel)
-      "q_bm25_topk", "q_bm25_stored", "q_bm25_anchors", "q_bm25_capped",
-      "q_bm25_phrase", "q_bm25_phrase_stored", "q_bm25_proximity",
-      "q_bm25_proximity_stored", "q_bm25_maxscore",
-      // the stored max-score probe (block-max lane) crosses the same
-      // one-row corpus-stats broadcast as every other scorer row
-      "q_bm25_blockmax",
       // the NB classifier attaches its one-row totals/priors relation
       // (n_pos, n_neg, t_pos, t_neg — a global aggregate / the model
       // meta) via crossJoin(broadcast): the q_lm_score V-scalar shape
       "q_quality_classifier")
       // (q_cap_recall_compare / q_band_recall_compare once sat here for
       // their one-row denominator cross-join; the denominator is now a
-      // collected literal, so their plans are BNLJ-free again)
+      // collected literal, so their plans are BNLJ-free again. So did
+      // the ten q_bm25_* rows for their one-row corpus-stats cross-join;
+      // the stats now ride as literals.)
 
   private def planOf(name: String): String =
     Registry.byName(name).run(spark, sfDir)
