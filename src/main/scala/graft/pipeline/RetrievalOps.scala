@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.LongPairMinKHeap
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Ranked retrieval over the corpus — BM25 top-K with an INTEGER-EXACT
   * scoring variant (every signal is BIGINT arithmetic: scaled integral
@@ -30,10 +32,14 @@ import org.apache.spark.sql.functions._
   * at the API).
   *
   * Token arithmetic follows `split(text, ' ')` exactly (the repo-wide
-  * tokenizer seam), ties break by doc_id ascending, and top-K selection
-  * is a bounded pair heap ([[graft.functions.LongPairMinK]]) — no
-  * WindowExec anywhere, so a stopword query term that matches the whole
-  * corpus costs a k-slot buffer per query, not a per-query sort. */
+  * tokenizer seam) and ties break by doc_id ascending. Top-K selection
+  * keeps (−score, doc_id) pairs in bounded heaps: [[scoreTopK]] scores
+  * each task's docs one at a time into a k-slot heap per query
+  * ([[graft.functions.LongPairMinKHeap]]), and [[topKOf]] merges the
+  * tasks' heaps per query ([[graft.functions.LongPairMinK]]). No
+  * WindowExec and no per-(query, doc) aggregate runs, so a stopword
+  * query term that matches the whole corpus costs a k-slot buffer per
+  * query and task, not a per-query sort. */
 object RetrievalOps {
 
   /** idf saturation cap — keeps idf_micro·tf_micro·terms < 2⁶³. */
@@ -58,14 +64,15 @@ object RetrievalOps {
     * costs one tiny pass.
     *
     * The rows hash by `doc_id`, so every posting of a doc lands in one
-    * task. Each consumer groups or joins on `doc_id` (the per-(query,
-    * doc) score rollup, the positional self-joins, `cand ⋈ pairs`), and
-    * `HashPartitioning(doc_id)` already satisfies those distributions
-    * through the broadcast joins: a (query, doc) score is complete in
-    * the task that holds its postings, and only per-query partial heaps
-    * cross the top-K exchange. A round-robin spread expanded 45,584
-    * probed postings into 544,763 partial sums that crossed a second
-    * exchange (`retrieval_serve` seed 1, 4 cores). */
+    * task. [[scoreTopK]] relies on that: it scores a task's docs one at
+    * a time and sends only per-query heaps across the top-K exchange. The
+    * other consumers group or join on `doc_id` (the positional
+    * self-joins, `cand ⋈ pairs`), and `HashPartitioning(doc_id)` already
+    * satisfies those distributions through the broadcast joins. A
+    * second `spread` of a spread relation plans away. A round-robin
+    * spread expanded 45,584 probed postings into 544,763 partial sums
+    * that crossed a second exchange (`retrieval_serve` seed 1, 4
+    * cores). */
   private def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism,
       col("doc_id"))
@@ -98,13 +105,14 @@ object RetrievalOps {
     * `avgdlMilli` = ⌊1000·T / N⌋ (see the object scaladoc). [[attach]]
     * adds them to a relation as the literal columns `n_docs` and
     * `avgdl_milli`, so no stats relation is joined or broadcast. */
-  private final case class CorpusStats(nDocs: Long, avgdlMilli: Long) {
+  private[pipeline] final case class CorpusStats(nDocs: Long,
+                                                 avgdlMilli: Long) {
     def attach(df: DataFrame): DataFrame =
       df.select(col("*"), lit(nDocs).as("n_docs"),
         lit(avgdlMilli).as("avgdl_milli"))
   }
 
-  private object CorpusStats {
+  private[pipeline] object CorpusStats {
     /** From the corpus counters: N docs, T tokens. */
     def of(nDocs: Long, totalTokens: Long): CorpusStats =
       CorpusStats(nDocs, 1000L * totalTokens / math.max(nDocs, 1L))
@@ -139,6 +147,36 @@ object RetrievalOps {
           .as("token"))
   }
 
+  /** A query workload's term rows ([[queryTerms]], or [[phraseTerms]]
+    * on the phrase probes), collected to the driver once: one job, where
+    * the width/null guard's `raise_error` fires. The rows are the query
+    * workload's, which a broadcast join would bring to the driver anyway.
+    * `rel` re-plants them as a local relation for the joins that read
+    * them, `terms` are their distinct tokens, sorted, `termsRel` holds
+    * those as a one-column (token) local relation, and [[index]] is the
+    * form [[scoreTopK]]'s tasks read. */
+  private[pipeline] final class Workload(termRows: DataFrame) {
+    val rows: Array[Row] = termRows.collect()
+    val rel: DataFrame = termRows.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), termRows.schema)
+    lazy val terms: Array[String] =
+      rows.map(_.getAs[String]("token")).distinct.sorted
+
+    def termsRel: DataFrame = rel.sparkSession.createDataFrame(
+      java.util.Arrays.asList(terms.map(Row(_)): _*),
+      StructType(Seq(StructField("token", StringType))))
+
+    /** The distinct query ids, and for each term the indexes of the
+      * queries that hold it, one per (query_id, token) row. */
+    lazy val index: (Array[Any], Map[String, Array[Int]]) = {
+      val ids = rows.map(_.getAs[Any]("query_id")).distinct
+      val at = ids.zipWithIndex.toMap
+      (ids, rows.groupBy(_.getAs[String]("token")).map { case (t, rs) =>
+        t -> rs.map(r => at(r.getAs[Any]("query_id")))
+      })
+    }
+  }
+
   /** The exact BM25 saturation term scaled by 10⁶ (see the object
     * scaladoc); needs `dl` on the row and `avgdl_milli` in scope. */
   private def tfMicro: Column =
@@ -146,9 +184,31 @@ object RetrievalOps {
       lit(10L) * col("tf") + lit(3L) +
         div(lit(9000L) * col("dl"), col("avgdl_milli")))
 
-  /** Per-(query, doc) integer-exact BM25 scores over `cand` — the ONE
-    * scoring kernel behind every path (one-shot, stored, capped,
-    * phrase), so all are score-identical by construction.
+  /** One posting's integer-exact BM25 contribution,
+    * ⌊min(idf_micro, cap)·tf_micro / 10⁶⌋ (see the object scaladoc): the
+    * ONE contribution expression every scorer sums, so all paths (one-shot,
+    * stored, capped, max-score, phrase, proximity) are score-identical by
+    * construction. Needs `tf`, `dl` and `__df` on the row and the
+    * [[CorpusStats]] columns in scope. */
+  private def contribMicro: Column =
+    div(idfMicro(col("__df")) * tfMicro, lit(1000000L))
+
+  /** The capped idf_micro of a term with document frequency `df` (see
+    * the object scaladoc); needs `n_docs` in scope. */
+  private def idfMicro(df: Column): Column =
+    least(div(lit(1000000L) * (lit(2L) * (col("n_docs") - df) + lit(1L)),
+      lit(2L) * df + lit(1L)), lit(IdfCapMicro))
+
+  /** Document frequency per token, (token, __df), counted over `cand`:
+    * the true df when `cand` holds every posting of its terms. */
+  private def dfreqOf(cand: DataFrame): DataFrame =
+    cand.groupBy(col("token")).agg(count(lit(1)).as("__df"))
+
+  /** Per-(query, doc) BM25 scores over `cand`, (query_id, doc_id,
+    * score_micro), as a relational aggregate: `cand` joined to the
+    * query terms, summed per (query, doc). The max-score internals read
+    * these partial scores; a plain top-K runs [[scoreTopK]] instead, whose
+    * output equals `topKOf(scoredContrib(...), k)` (spec-pinned).
     *
     * Without `dfreqOverride`, `cand` must hold EVERY posting of every
     * query term (and may hold only those): df per token is then
@@ -156,26 +216,18 @@ object RetrievalOps {
     * pre-truncation df instead, so truncating a posting list never
     * inflates a term's idf. Both joins broadcast the query-workload
     * side and keep `cand`'s partitioning, so a `cand` hashed by doc_id
-    * ([[spread]]) rolls up per (query, doc) without an exchange; any
-    * other `cand` (the capped mode's by-token truncation) shuffles its
-    * partial sums once. */
-  private def scoredContrib(cand: DataFrame, stats: CorpusStats,
-                            qterms: DataFrame,
-                            dfreqOverride: Option[DataFrame] = None)
+    * ([[spread]]) rolls up per (query, doc) without an exchange. */
+  private[pipeline] def scoredContrib(cand: DataFrame, stats: CorpusStats,
+                                      qterms: DataFrame,
+                                      dfreqOverride: Option[DataFrame] = None)
       : DataFrame = {
-    val dfreq = dfreqOverride.getOrElse(
-      cand.groupBy(col("token")).agg(count(lit(1)).as("__df")))
-    val n = col("n_docs")
-    val idfRaw = div(lit(1000000L) * (lit(2L) * (n - col("__df")) + lit(1L)),
-      lit(2L) * col("__df") + lit(1L))
-    val contrib = div(least(idfRaw, lit(IdfCapMicro)) * tfMicro,
-      lit(1000000L))
+    val dfreq = dfreqOverride.getOrElse(dfreqOf(cand))
     cand
       .join(broadcast(qterms), Seq("token"))
       .join(broadcast(dfreq), Seq("token"))
       .transform(stats.attach)
       .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(contrib).as("score_micro"))
+      .agg(sum(contribMicro).as("score_micro"))
   }
 
   /** [[scoredContrib]] RESTRICTED to a (query_id, doc_id) pair
@@ -191,26 +243,20 @@ object RetrievalOps {
                                     qt: DataFrame, pairs: DataFrame,
                                     dfreqOverride: Option[DataFrame] = None)
       : DataFrame = {
-    val dfreq = dfreqOverride.getOrElse(
-      cand.groupBy(col("token")).agg(count(lit(1)).as("__df")))
-    val n = col("n_docs")
-    val idfRaw = div(lit(1000000L) * (lit(2L) * (n - col("__df")) + lit(1L)),
-      lit(2L) * col("__df") + lit(1L))
-    val contrib = div(least(idfRaw, lit(IdfCapMicro)) * tfMicro,
-      lit(1000000L))
+    val dfreq = dfreqOverride.getOrElse(dfreqOf(cand))
     cand.join(pairs.select(col("query_id"), col("doc_id")), Seq("doc_id"))
       .join(broadcast(qt), Seq("query_id", "token"), "left_semi")
       .join(broadcast(dfreq), Seq("token"))
       .transform(stats.attach)
       .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(contrib).as("score_micro"))
+      .agg(sum(contribMicro).as("score_micro"))
   }
 
   /** Each query's top-K of a (query_id, doc_id, score_micro) relation
     * via the bounded pair heap on (−score, doc_id) — ascending pairs
     * give score DESC, doc_id ASC; O(k) state per query regardless of
     * candidate volume, no WindowExec. */
-  private def topKOf(scored: DataFrame, k: Int): DataFrame = {
+  private[pipeline] def topKOf(scored: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"bm25: k must be >= 1, got $k")
     scored.groupBy(col("query_id"))
       .agg(graft.functions.LongPairMinK.minK(
@@ -223,13 +269,106 @@ object RetrievalOps {
         (-col("__pair").getField("a")).as("score_micro"))
   }
 
-  /** Score candidate postings against the query terms and keep each
-    * query's top-K — [[scoredContrib]] + [[topKOf]]. */
-  private def scoreTopK(cand: DataFrame, stats: CorpusStats,
-                        qterms: DataFrame, k: Int,
-                        dfreqOverride: Option[DataFrame] = None)
-      : DataFrame =
-    topKOf(scoredContrib(cand, stats, qterms, dfreqOverride), k)
+  /** Each query's top-`k` over the candidate postings `cand` (token,
+    * doc_id, tf, dl), scored document at a time in one per-task kernel.
+    * Every bag top-K runs through it: the one-shot exact and capped
+    * scorers, the stored exact and capped probes, and the forensic K′
+    * prefix. Output ≡ `topKOf(scoredContrib(cand, stats, w.rel,
+    * dfreqOverride), k)` (spec-pinned), in five steps:
+    *  1. [[spread]] `cand` by doc_id, so every posting of a doc sits in
+    *     one task (a `cand` that is already spread plans the repeat
+    *     away);
+    *  2. compute each posting's [[contribMicro]] once — the postings meet
+    *     the df relation only, never the query terms, so a term that many
+    *     queries share does not multiply its postings;
+    *  3. sort each partition by doc_id (Spark's spillable sort);
+    *  4. walk the docs one at a time ([[docAtATimeTopK]]): a posting adds
+    *     its contribution to every query that holds its term, and at the
+    *     doc's end each touched query offers (−score, doc_id) to its
+    *     k-slot heap, so ties break as in [[topKOf]];
+    *  5. emit at most k rows per query and task into the [[topKOf]]
+    *     merge.
+    * The query terms reach the tasks from the driver (the collected
+    * [[Workload]]), so a task holds O(queries × k) state besides the
+    * sort, and no aggregate is keyed by (query_id, doc_id). */
+  private[pipeline] def scoreTopK(cand: DataFrame, stats: CorpusStats,
+                                  w: Workload, k: Int,
+                                  dfreqOverride: Option[DataFrame] = None)
+      : DataFrame = {
+    val dfreq = dfreqOverride.getOrElse(dfreqOf(cand))
+    val (queryIds, byTerm) = w.index
+    val out = StructType(Seq(w.rel.schema("query_id"),
+      StructField("doc_id", LongType, nullable = false),
+      StructField("score_micro", LongType, nullable = false)))
+    val postings = spread(cand)
+      .join(broadcast(dfreq), Seq("token"))
+      .transform(stats.attach)
+      .select(col("doc_id"), col("token"), contribMicro.as("__c"))
+      .sortWithinPartitions(col("doc_id"))
+      .as(Encoders.tuple(Encoders.LONG, Encoders.STRING, Encoders.LONG))
+    topKOf(postings.mapPartitions(rows =>
+      docAtATimeTopK(rows, queryIds, byTerm, k))(Encoders.row(out)), k)
+  }
+
+  /** [[scoreTopK]]'s per-task kernel. `rows` are (doc_id, token,
+    * contribution), sorted by doc_id, with every posting of a doc in
+    * this task; `byTerm` maps a term to the indexes into `queryIds` of
+    * the queries that hold it (an index once per workload row, as the
+    * relational join counts it). Per doc, each query's contributions sum
+    * in a primitive accumulator (`Math.addExact`: an overflow fails
+    * loudly, as ANSI `sum` does); null doc ids and null contributions
+    * are skipped, as the relational sum and [[topKOf]]'s heap skip
+    * them. Returns each query's k best (query_id, doc_id, score_micro)
+    * rows of this task, unordered. */
+  private def docAtATimeTopK(rows: Iterator[(java.lang.Long, String,
+                                             java.lang.Long)],
+                             queryIds: Array[Any],
+                             byTerm: Map[String, Array[Int]],
+                             k: Int): Iterator[Row] = {
+    val acc = new Array[Long](queryIds.length)
+    val touched = new Array[Int](queryIds.length)
+    val isTouched = new Array[Boolean](queryIds.length)
+    var nTouched = 0
+    val heaps = new Array[LongPairMinKHeap](queryIds.length)
+    var doc = 0L
+    def endDoc(): Unit = {
+      var i = 0
+      while (i < nTouched) {
+        val q = touched(i)
+        if (heaps(q) == null) heaps(q) = new LongPairMinKHeap(k)
+        heaps(q).add(-acc(q), doc)
+        acc(q) = 0L
+        isTouched(q) = false
+        i += 1
+      }
+      nTouched = 0
+    }
+    while (rows.hasNext) {
+      val (d, token, c) = rows.next()
+      val qs = if (d == null || c == null) null
+        else byTerm.getOrElse(token, null)
+      if (qs != null) {
+        if (nTouched > 0 && d.longValue != doc) endDoc()
+        doc = d
+        var i = 0
+        while (i < qs.length) {
+          val q = qs(i)
+          acc(q) = Math.addExact(acc(q), c.longValue)
+          if (!isTouched(q)) {
+            isTouched(q) = true
+            touched(nTouched) = q
+            nTouched += 1
+          }
+          i += 1
+        }
+      }
+    }
+    endDoc()
+    heaps.iterator.zipWithIndex.filter(_._1 != null).flatMap {
+      case (h, q) => Iterator.tabulate(h.size)(i =>
+        Row(queryIds(q), h.values(2 * i + 1), -h.values(2 * i)))
+    }
+  }
 
   /** BOUNDED-COST serving: keep only each term's `dfCap`
     * highest-contribution postings (exact tf_micro order, ties by
@@ -259,14 +398,14 @@ object RetrievalOps {
     * dfCap rows per token before the exchange, so the shuffle carries
     * ≤ dfCap × input-partitions rows per token, not the full posting
     * list. */
-  private def truncatePerTerm(cand: DataFrame, stats: CorpusStats,
-                              dfCap: Int,
-                              dfreqOverride: Option[DataFrame] = None)
+  private[pipeline] def truncatePerTerm(cand: DataFrame, stats: CorpusStats,
+                                        dfCap: Int,
+                                        dfreqOverride: Option[DataFrame] =
+                                          None)
       : (DataFrame, DataFrame) = {
     require(dfCap >= 1, s"bm25: dfCapPerTerm must be >= 1, got $dfCap")
     import org.apache.spark.sql.expressions.Window
-    val dfreq = dfreqOverride.getOrElse(
-      cand.groupBy(col("token")).agg(count(lit(1)).as("__df")))
+    val dfreq = dfreqOverride.getOrElse(dfreqOf(cand))
     val w = Window.partitionBy(col("token"))
       .orderBy(col("__tfm").desc, col("doc_id").asc)
     val kept = cand.transform(stats.attach)
@@ -294,23 +433,22 @@ object RetrievalOps {
     val dl = Checkpoints.sever(
       post.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
     val stats = statsOf(dl)
-    val qt = Checkpoints.sever(
-      queryTerms(queries, queryIdCol, queryTextCol))
-    val terms = qt.select(col("token")).distinct()
+    val w = new Workload(queryTerms(queries, queryIdCol, queryTextCol))
     // spread (r19, guide §2.5 input-skew corner): the severed postings
     // relation is tiny-compressed, so AQE coalesces the stage under it
-    // to ONE task and the scoring fan-out — the broadcast joins plus
-    // the partial aggregation, the row's dominant CPU — ran serial
-    // while the other cores idled (the stored probes' r18 fix, driver-
-    // validated at 3.3× there; the r18 GLOBAL AQE floor aimed at this
+    // to ONE task and the scoring — the row's dominant CPU — ran
+    // serial while the other cores idled (the stored probes' r18 fix,
+    // driver-validated at 3.3× there; the r18 GLOBAL AQE floor aimed at this
     // same stage regressed the suite and is reverted). The exchange
     // moves every matched posting, Σ df(t) over the query terms: it
     // grows with the corpus (147M rows at the ×10 scale leg), not only
-    // with the workload.
-    val cand = spread(post.join(broadcast(terms), Seq("token"), "left_semi")
-      .join(dl, Seq("doc_id"))
-      .select(col("token"), col("doc_id"), col("tf"), col("dl")))
-    scoreTopK(cand, stats, qt, k)
+    // with the workload. The df count reads the spread rows too, and
+    // scoreTopK's own spread plans away.
+    val cand = spread(
+      post.join(broadcast(w.termsRel), Seq("token"), "left_semi")
+        .join(dl, Seq("doc_id"))
+        .select(col("token"), col("doc_id"), col("tf"), col("dl")))
+    scoreTopK(cand, stats, w, k)
   }
 
   /** [[bm25TopK]] with BOUNDED candidate volume: every query term's
@@ -327,14 +465,12 @@ object RetrievalOps {
     val dl = Checkpoints.sever(
       post.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
     val stats = statsOf(dl)
-    val qt = Checkpoints.sever(
-      queryTerms(queries, queryIdCol, queryTextCol))
-    val terms = qt.select(col("token")).distinct()
-    val cand0 = post.join(broadcast(terms), Seq("token"), "left_semi")
+    val w = new Workload(queryTerms(queries, queryIdCol, queryTextCol))
+    val cand0 = post.join(broadcast(w.termsRel), Seq("token"), "left_semi")
       .join(dl, Seq("doc_id"))
       .select(col("token"), col("doc_id"), col("tf"), col("dl"))
     val (kept, dfreq) = truncatePerTerm(cand0, stats, dfCapPerTerm)
-    scoreTopK(kept, stats, qt, k, dfreqOverride = Some(dfreq))
+    scoreTopK(kept, stats, w, k, dfreqOverride = Some(dfreq))
   }
 
   /** EXACT top-K at bounded cost — max-score / WAND-family pruning
@@ -401,8 +537,7 @@ object RetrievalOps {
       : DataFrame = {
     require(k >= 1, s"bm25: k must be >= 1, got $k")
     require(dfSplit >= 1, s"bm25: dfSplit must be >= 1, got $dfSplit")
-    val dfreq = Checkpoints.sever(dfreqOverride.getOrElse(
-      cand.groupBy(col("token")).agg(count(lit(1)).as("__df"))))
+    val dfreq = Checkpoints.sever(dfreqOverride.getOrElse(dfreqOf(cand)))
     val lowTerms = dfreq.filter(col("__df") <= dfSplit)
       .select(col("token"))
     val highTerms = dfreq.filter(col("__df") > dfSplit)
@@ -435,11 +570,6 @@ object RetrievalOps {
 
     // per-high-term upper bound UB(t) = contrib at that term's best
     // posting; Σ per query = the most the high terms can add anywhere
-    val n = col("n_docs")
-    val idfCapped = least(
-      div(lit(1000000L) * (lit(2L) * (n - col("__df")) + lit(1L)),
-        lit(2L) * col("__df") + lit(1L)),
-      lit(IdfCapMicro))
     val ub = ubOverride match {
       // stored term stats: an ADMISSIBLE (possibly looser) bound —
       // less pruning in the worst case, identical output either way
@@ -449,7 +579,7 @@ object RetrievalOps {
         .groupBy(col("token")).agg(max(tfMicro).as("__maxtfm"))
         .join(broadcast(dfreq), Seq("token"))
         .transform(stats.attach)
-        .select(col("token"), div(idfCapped * col("__maxtfm"),
+        .select(col("token"), div(idfMicro(col("__df")) * col("__maxtfm"),
           lit(1000000L)).as("__ub"))
     }
     val sHigh = qtHigh.join(broadcast(ub), Seq("token"))
@@ -503,7 +633,7 @@ object RetrievalOps {
       .transform(stats.attach)
       .join(broadcast(dfreq), Seq("token"))
       .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(div(idfCapped * tfMicro, lit(1000000L))).as("__sh"))
+      .agg(sum(contribMicro).as("__sh"))
     val prunedScored = candidates
       .join(highContrib, Seq("query_id", "doc_id"), "left")
       .select(col("query_id"), col("doc_id"),
@@ -593,15 +723,10 @@ object RetrievalOps {
     val survPost = cand.withColumn("blk", blkOf(blockCount))
       .join(sv, Seq("blk"))
       .join(broadcast(qtBlock), Seq("query_id", "token"), "left_semi")
-    val n = col("n_docs")
-    val idfRaw = div(lit(1000000L) * (lit(2L) * (n - col("__df")) + lit(1L)),
-      lit(2L) * col("__df") + lit(1L))
-    val contrib = div(least(idfRaw, lit(IdfCapMicro)) * tfMicro,
-      lit(1000000L))
     val blockScored = survPost.join(broadcast(dfreq), Seq("token"))
       .transform(stats.attach)
       .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(contrib).as("score_micro"))
+      .agg(sum(contribMicro).as("score_micro"))
     blockScored.unionByName(
       scoredContrib(cand, stats, qtExact, dfreqOverride = Some(dfreq)))
   }
@@ -819,9 +944,10 @@ object RetrievalOps {
     * those queries, scored per matched pair. Exact output either way;
     * K′ trades prefix width against fallback frequency. */
   private def rankedForensicTopK(cand: DataFrame, stats: CorpusStats,
-                                 qt: DataFrame, k: Int, dfreq: DataFrame,
+                                 w: Workload, k: Int, dfreq: DataFrame,
                                  restrictedMatch: DataFrame => DataFrame,
                                  extraCol: String): DataFrame = {
+    val qt = w.rel
     // prefix width: wide enough that a dense workload (every doc a
     // bag candidate, windows loosely correlated with bag score) finds
     // its k matches inside the prefix — the fallback lane pays the
@@ -829,7 +955,7 @@ object RetrievalOps {
     // restricted pass for fewer fallback queries wins
     val kPrime = math.max(256, 16 * k)
     val prefix = Checkpoints.sever(
-      topKOf(scoredContrib(cand, stats, qt, Some(dfreq)), kPrime))
+      scoreTopK(cand, stats, w, kPrime, Some(dfreq)))
     val matches1 = Checkpoints.sever(
       restrictedMatch(prefix.select(col("query_id"), col("doc_id"))))
     // absent-term shortcut: a query whose rarest term has df = 0 can
@@ -907,26 +1033,24 @@ object RetrievalOps {
     val dl = Checkpoints.sever(
       post.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
     val stats = statsOf(dl)
-    val qt = Checkpoints.sever(
-      queryTerms(queries, queryIdCol, queryTextCol))
-    val terms = qt.select(col("token")).distinct()
+    val w = new Workload(queryTerms(queries, queryIdCol, queryTextCol))
+    val terms = w.termsRel
     // spread: same single-task-fan-out fix as bm25TopK (the stored
     // proximity path already spreads its cand)
     val cand = spread(post.join(broadcast(terms), Seq("token"), "left_semi")
       .join(dl, Seq("doc_id"))
       .select(col("token"), col("doc_id"), col("tf"), col("dl")))
-    val dfreq = Checkpoints.sever(
-      cand.groupBy(col("token")).agg(count(lit(1)).as("__df")))
+    val dfreq = Checkpoints.sever(dfreqOf(cand))
     val pp = Checkpoints.sever(spread(
       pos.join(broadcast(terms), Seq("token"), "left_semi")))
-    rankedForensicTopK(cand, stats, qt, k, dfreq,
+    rankedForensicTopK(cand, stats, w, k, dfreq,
       restrictedMatch = pairs =>
-        proximityFromPositions(pp, qt, windowTokens, Some(pairs)),
+        proximityFromPositions(pp, w.rel, windowTokens, Some(pairs)),
       extraCol = "n_windows")
   }
 
   /** PHRASE-FILTERED ranked retrieval: BM25 top-`k` (the exact scorer
-    * over the phrase's distinct terms — [[scoredContrib]], same
+    * over the phrase's distinct terms — the [[contribMicro]] sum, same
     * integer arithmetic as every other path) restricted to docs
     * containing the phrase as a consecutive token run, with each hit's
     * occurrence count attached. Output: (query_id, rank, doc_id,
@@ -1064,8 +1188,9 @@ object RetrievalOps {
           "has_positions", "has_termstats", "block_count"))
   }
 
-  private def readStoredPostings(spark: SparkSession, path: String,
-                                 meta: RetrievalIndexMeta): DataFrame =
+  private[pipeline] def readStoredPostings(spark: SparkSession, path: String,
+                                           meta: RetrievalIndexMeta)
+      : DataFrame =
     StoredParquet.read(spark,
       (meta.base to meta.epoch).map(postingsDir(path, _)): _*)
 
@@ -1389,23 +1514,24 @@ object RetrievalOps {
     * count), which the cap repays as soon as one term's df exceeds
     * it.
     *
-    * Jobs of one exact probe on a termstats artifact (7, with two
+    * Jobs of one exact probe on a termstats artifact (6, with two
     * exchanges; pinned by `RetrievalOpsSpec`). Every stored relation is
     * read with its schema from the parquet footer ([[StoredParquet]]),
     * so no schema-inference job runs, and the corpus stats ride as
     * literals ([[CorpusStats]]). Before the DataFrame returns:
     *  1. the meta row's collect;
-    *  2. the query-term collect ([[probeWorkload]]).
+    *  2. the query-term collect ([[probeWorkload]]); the terms reach
+    *     the scoring tasks from the driver, so no query-term broadcast
+    *     runs.
     * Under AQE, at the caller's action:
-    *  3. and 4. two broadcasts: the query terms (a local relation) and
-    *     the termstats df slice (read in place: one reader, so not
-    *     severed);
-    *  5. the spread of the term-filtered postings, hashed by doc_id:
-    *     each (query, doc) score then sums inside the task that holds
-    *     the doc's postings, with no exchange of its own;
-    *  6. the per-query top-K, whose exchange moves per-task partial
+    *  3. the broadcast of the termstats df slice (read in place: one
+    *     reader, so not severed);
+    *  4. the spread of the term-filtered postings, hashed by doc_id:
+    *     [[scoreTopK]] then scores each task's docs one at a time, with
+    *     no exchange of its own;
+    *  5. the per-query top-K, whose exchange moves each task's k-slot
     *     heaps;
-    *  7. the result stage.
+    *  6. the result stage.
     * A window of several epochs adds the termstats merge's exchange. */
   def bm25AgainstStoredIndex(spark: SparkSession, path: String,
                              queries: DataFrame, queryIdCol: String,
@@ -1418,9 +1544,9 @@ object RetrievalOps {
         "the cap) or maxScoreSplit (bounded common case, always exact)")
     val meta = readRetrievalIndexMeta(spark, path)
     val stats = CorpusStats.of(meta.nDocs, meta.totalTokens)
-    val (qt, terms) = probeWorkload(
-      queryTerms(queries, queryIdCol, queryTextCol), maxTerms,
-      "bm25AgainstStoredIndex")
+    val w = probeWorkload(queryTerms(queries, queryIdCol, queryTextCol),
+      maxTerms, "bm25AgainstStoredIndex")
+    val terms = w.terms
     val cand0 = readStoredPostings(spark, path, meta)
       .filter(col("token").isin(terms.toSeq: _*))
     val cand = spread(cand0)
@@ -1442,10 +1568,7 @@ object RetrievalOps {
     // increasing in tf and decreasing in dl, so the cell maxima bound
     // every posting of the cell — shared by the max-score branch's
     // per-term UB and its per-(token, block) UB
-    val idfUbCol = least(
-      div(lit(1000000L) * (lit(2L) * (col("n_docs") - col("df")) + lit(1L)),
-        lit(2L) * col("df") + lit(1L)),
-      lit(IdfCapMicro))
+    val idfUbCol = idfMicro(col("df"))
     val tfmUbCol = div(lit(22000000L) * col("max_tf"),
       lit(10L) * col("max_tf") + lit(3L) +
         div(lit(9000L) * col("min_dl"), col("avgdl_milli")))
@@ -1469,7 +1592,7 @@ object RetrievalOps {
         // the exchange instead of ≤ cap — measured 6.5 → 16.9 s on
         // the 10× capped serving leg before this carve-out)
         val (kept, dfreq) = truncatePerTerm(cand0, stats, cap, dfStore)
-        scoreTopK(kept, stats, qt, k, dfreqOverride = Some(dfreq))
+        scoreTopK(kept, stats, w, k, dfreqOverride = Some(dfreq))
       case (_, Some(split)) =>
         val ubStore = ts.map { t =>
           t.transform(stats.attach)
@@ -1485,7 +1608,7 @@ object RetrievalOps {
               meta.blockCount))
           case _ => None
         }
-        maxScoreCore(cand, stats, qt, k, split, dfStore, ubStore, blockOpt,
+        maxScoreCore(cand, stats, w.rel, k, split, dfStore, ubStore, blockOpt,
           seedCand = Some(cand0))
       case _ =>
         // EXACT serving: the plain scorer. Block-max pruning here lost
@@ -1493,7 +1616,7 @@ object RetrievalOps {
         // vocabulary leaves no block below the seeded threshold), so
         // block pruning serves exact answers only through
         // `maxScoreSplit`'s fallback lane.
-        scoreTopK(cand, stats, qt, k, dfreqOverride = dfStore)
+        scoreTopK(cand, stats, w, k, dfreqOverride = dfStore)
     }
   }
 
@@ -1516,9 +1639,9 @@ object RetrievalOps {
         "withPositions) — phrase probes need the positional relation; " +
         "rebuild via writeRetrievalIndex(..., withPositions = true)")
     val stats = CorpusStats.of(meta.nDocs, meta.totalTokens)
-    val (pt, terms) = probeWorkload(
-      phraseTerms(queries, queryIdCol, queryTextCol), maxTerms,
-      "phraseAgainstStoredIndex")
+    val pw = probeWorkload(phraseTerms(queries, queryIdCol, queryTextCol),
+      maxTerms, "phraseAgainstStoredIndex")
+    val (pt, terms) = (pw.rel, pw.terms)
     val qt = pt.select(col("query_id"), col("token")).distinct()
     val cand = spread(readStoredPostings(spark, path, meta)
       .filter(col("token").isin(terms.toSeq: _*)))
@@ -1534,24 +1657,17 @@ object RetrievalOps {
         col("score_micro"), col("n_occurrences"))
   }
 
-  /** A stored probe's workload rows ([[queryTerms]] or [[phraseTerms]]),
-    * collected once — one job, where the width/null guard's
-    * `raise_error` fires. Returns them as a local relation for the
-    * scoring joins, with their distinct `token`s, sorted, for the
-    * literal term filter. The rows are the query workload's, which the
-    * scoring join's broadcast brings to the driver anyway; past
-    * `maxTerms` distinct terms the probe (named by `probe`) fails
-    * loudly. */
+  /** A stored probe's [[Workload]]: past `maxTerms` distinct terms the
+    * probe (named by `probe`) fails loudly, since its terms become a
+    * literal filter. */
   private def probeWorkload(rel: DataFrame, maxTerms: Int,
-                            probe: String): (DataFrame, Array[String]) = {
-    val rows = rel.collect()
-    val terms = rows.map(_.getAs[String]("token")).distinct.sorted
-    require(terms.length <= maxTerms,
-      s"$probe: query workload has ${terms.length} distinct terms, past " +
+                            probe: String): Workload = {
+    val w = new Workload(rel)
+    require(w.terms.length <= maxTerms,
+      s"$probe: query workload has ${w.terms.length} distinct terms, past " +
         s"the $maxTerms literal-filter guard — shard the workload across " +
         "probes")
-    (rel.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-      rel.schema), terms)
+    w
   }
 
   /** True df of a probe's terms from the termstats relation when the
@@ -1584,20 +1700,19 @@ object RetrievalOps {
         "relation; rebuild via writeRetrievalIndex(..., " +
         "withPositions = true)")
     val stats = CorpusStats.of(meta.nDocs, meta.totalTokens)
-    val (qt, terms) = probeWorkload(
-      queryTerms(queries, queryIdCol, queryTextCol), maxTerms,
-      "proximityAgainstStoredIndex")
+    val w = probeWorkload(queryTerms(queries, queryIdCol, queryTextCol),
+      maxTerms, "proximityAgainstStoredIndex")
+    val terms = w.terms
     val cand = spread(readStoredPostings(spark, path, meta)
       .filter(col("token").isin(terms.toSeq: _*)))
     val pp = Checkpoints.sever(spread(
       readStoredPositions(spark, path, meta)
         .filter(col("token").isin(terms.toSeq: _*))))
     val dfreq = storedDfreq(spark, path, meta, terms).getOrElse(
-      Checkpoints.sever(
-        cand.groupBy(col("token")).agg(count(lit(1)).as("__df"))))
-    rankedForensicTopK(cand, stats, qt, k, dfreq,
+      Checkpoints.sever(dfreqOf(cand)))
+    rankedForensicTopK(cand, stats, w, k, dfreq,
       restrictedMatch = pairs =>
-        proximityFromPositions(pp, qt, windowTokens, Some(pairs)),
+        proximityFromPositions(pp, w.rel, windowTokens, Some(pairs)),
       extraCol = "n_windows")
   }
 }

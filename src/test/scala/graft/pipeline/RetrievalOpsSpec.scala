@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -492,7 +493,7 @@ class RetrievalOpsSpec extends AnyFunSuite {
       "exact stored probe must equal the one-shot scorer")
   }
 
-  // the name keeps its original bound; the pin is 7 jobs (the list is
+  // the name keeps its original bound; the pin is 6 jobs (the list is
   // in bm25AgainstStoredIndex's scaladoc)
   test("EXACT stored probe runs at most 10 Spark jobs, none of them a " +
     "parquet schema inference") {
@@ -503,7 +504,7 @@ class RetrievalOpsSpec extends AnyFunSuite {
       RetrievalOps.bm25AgainstStoredIndex(spark, dir, queriesDf(probeQs),
         "query_id", "query_text", 5).collect())
     val listing = jobs.map(_.mkString(" | ")).mkString("\n  ")
-    assert(jobs.size <= 7, s"${jobs.size} jobs:\n  $listing")
+    assert(jobs.size <= 6, s"${jobs.size} jobs:\n  $listing")
     assert(!jobs.flatten.exists(_.startsWith("parquet at")),
       s"a schema-inference job ran:\n  $listing")
   }
@@ -541,6 +542,34 @@ class RetrievalOpsSpec extends AnyFunSuite {
     // the candidate spread, then the per-query top-K
     assert(keys.sortBy(_.mkString(",")) == Seq(Seq("doc_id"), Seq("query_id")),
       s"shuffle keys: $keys")
+  }
+
+  test("the bag top-K paths plan no aggregate keyed by (query_id, " +
+    "doc_id): the stored exact and capped probes, the one-shot exact and " +
+    "capped scorers") {
+    val dir = tmp("noagg")
+    RetrievalOps.writeRetrievalIndex(corpusDf(0L to 39L), "text",
+      "doc_id", dir)
+    val qs = queriesDf(probeQs)
+    def perPairAggs(out: DataFrame): Seq[Seq[String]] = {
+      out.collect()
+      PlanWalk.collect(out.queryExecution.executedPlan) {
+        case a: BaseAggregateExec => a.groupingExpressions.map(_.name)
+      }.filter(g => g.contains("query_id") && g.contains("doc_id"))
+    }
+    val paths = Seq(
+      "stored exact" -> RetrievalOps.bm25AgainstStoredIndex(spark, dir, qs,
+        "query_id", "query_text", 5),
+      "stored capped" -> RetrievalOps.bm25AgainstStoredIndex(spark, dir, qs,
+        "query_id", "query_text", 5, dfCapPerTerm = Some(3)),
+      "one-shot exact" -> RetrievalOps.bm25TopK(corpusDf(0L to 39L), "text",
+        "doc_id", qs, "query_id", "query_text", 5),
+      "one-shot capped" -> RetrievalOps.bm25TopKCapped(corpusDf(0L to 39L),
+        "text", "doc_id", qs, "query_id", "query_text", 5,
+        dfCapPerTerm = 3))
+    for ((label, out) <- paths)
+      assert(perPairAggs(out).isEmpty,
+        s"$label plans a per-(query, doc) aggregate: ${perPairAggs(out)}")
   }
 
   test("all-tied corpus: every stored mode ≡ its one-shot scorer, ties " +
